@@ -253,9 +253,7 @@ def main() -> None:
         code_engine.pin()
         qset = bench_query_set()
         # warm once (JVM/Arrow paths), then timed reps
-        code_engine.search_many(qset) if hasattr(code_engine, "search_many") else [
-            code_engine.search(r) for r in qset.values()
-        ]
+        code_engine.search_many(qset)
         # per-rep MINIMUM, not the mean: the sandbox host's available
         # throughput swings >2x in multi-minute windows (measured in
         # BENCH/headline_ab.json — identical pinned reps 0.96 s and
@@ -266,10 +264,7 @@ def main() -> None:
         rep_secs = []
         rep_canaries_mbps = []
         for _ in range(reps):
-            if hasattr(code_engine, "search_many"):
-                dt, res = _timed(lambda: code_engine.search_many(qset))
-            else:
-                dt, res = _timed(lambda: {k: code_engine.search(r) for k, r in qset.items()})
+            dt, res = _timed(lambda: code_engine.search_many(qset))
             rep_secs.append(round(dt, 3))
             # canary AFTER each rep: a slow rep next to a slow canary
             # is a throttled window, next to a fast canary an engine

@@ -38,6 +38,10 @@ def engine(spark):
             FieldConfig("altTitle", index_as=(IndexAs("altTitle", "whitespace_lc"),)),
             FieldConfig("altTitle2", index_as=(IndexAs("altTitle2", "whitespace_lc"),)),
             FieldConfig("docLanguage", index_as=(IndexAs("docLanguage", "lcKeyword"),)),
+            # the point-typed fields are configured (stored, no
+            # postings): bare patterns probe configured fields only
+            FieldConfig("isParent"),
+            FieldConfig("parentDocId"),
         ),
         # FieldWildcardTest's mappings: title -> altTitle+docTitle,
         # title2 -> *Title pattern, altTitle -> altTitle2 includeSelf
@@ -149,3 +153,48 @@ def test_alias_expansion_unchanged(engine):
     # anchored: *Title does NOT match altTitle2 (FieldWildcardTest's
     # title2 mapping covers altTitle + docTitle only)
     assert set(cfg2.expand_field("title2")) == {"docTitle", "altTitle"}
+
+
+def test_point_patterns_probe_configured_fields_only(spark):
+    # uniqueId "2016", an unconfigured stored int and a configured one:
+    # only the configured point field answers a bare pattern
+    cfg = IndexConfig(
+        index_name="points",
+        unique_id_col="uniqueId",
+        number_of_shards=1,
+        default_search_fields=("title",),
+        index_id_field=True,
+        field_configs=(
+            FieldConfig("title", index_as=(IndexAs("title", "whitespace_lc"),)),
+            FieldConfig("published"),
+        ),
+    )
+    df = spark.createDataFrame(
+        [("2016", "alpha", None, None), ("b", "beta", 2016, None), ("c", "gamma", None, 2016)],
+        "uniqueId string, title string, year int, published int",
+    )
+    tables = build_index(df, cfg, stored_cols=("year", "published")).persist()
+    try:
+        eng = SearchEngine(tables)
+        res = eng.search_string("*:2016", amount=10)
+        assert [t["uniqueId"] for t in res["topk"]] == ["c"]
+        assert _hits(eng, "year:2016") == 1  # explicit references still work
+    finally:
+        tables.unpersist()
+
+
+def test_point_pattern_never_targets_unique_id():
+    from zuliasearch_spark.search.parser import RRange, parse_query, resolve_tree
+
+    node = resolve_tree(
+        parse_query("*:2016"),
+        lambda f, t: [t],
+        (),
+        lambda f, rx: (),
+        lambda f, t, e: (),
+        expand_field=lambda f: (),
+        date_fields=frozenset({"uniqueId", "year", "published"}),
+        configured_fields=frozenset({"uniqueId", "published"}),
+    )
+    ranges = [c for _, c in node.children] if hasattr(node, "children") else [node]
+    assert [r.fields for r in ranges if isinstance(r, RRange)] == [("published",)]

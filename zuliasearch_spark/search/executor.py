@@ -67,10 +67,12 @@ from __future__ import annotations
 
 import re
 from collections.abc import Sequence
+from concurrent.futures import ThreadPoolExecutor
 from dataclasses import dataclass
 
 import numpy as np
 import pandas as pd
+from pyspark import inheritable_thread_target
 from pyspark.sql import functions as F
 
 from zuliasearch_spark.analysis.analyzers import analyze_query_text
@@ -1255,6 +1257,8 @@ class SearchEngine:
         self._known_terms: set[tuple[str, str]] = set()
         self._resolve_cache: dict[tuple, list[ResolvedClause]] = {}
         self._pinned: DataFrame | None = None
+        # uniqueId per (shard, doc_id), driver-resident (see _id_column)
+        self._ids: dict[int, np.ndarray] | None = None
         self.last_metrics: dict[str, int] = {"blocks_decoded": 0, "blocks_total": 0}
         # tombstoned (deleted) docs per shard — masked in the kernels,
         # purged by a segment rewrite (see delete_by_unique_ids).
@@ -1413,6 +1417,9 @@ class SearchEngine:
             all_fields=tuple(
                 dict.fromkeys(ia.indexed_field_name for _, ia in self.config.indexed_fields())
             ),
+            configured_fields=frozenset(
+                fc.stored_field_name for fc in self.config.field_configs
+            ),
         )
 
     def _clauses_to_tree(self, req: SearchRequest) -> RBool:
@@ -1525,7 +1532,8 @@ class SearchEngine:
 
     def pin(self, need_positions: bool = False) -> "SearchEngine":
         """Pin the postings RESIDENT in executor memory, hash-
-        partitioned by shard — the steady-state serving topology.
+        partitioned by shard — the steady-state serving topology —
+        and load the driver-side uniqueId column (:meth:`_id_column`).
 
         Without pinning, every query batch re-decodes the postings
         parquet and re-shuffles the matching blocks to their shard
@@ -1545,7 +1553,13 @@ class SearchEngine:
         ``need_positions=False`` (default) drops the pos_bytes stream
         from the resident copy — the largest per-posting payload,
         read only by phrase/interval queries, which transparently
-        fall back to the parquet scan path."""
+        fall back to the parquet scan path.
+
+        Pinned, a postings-class ``search()`` or ``search_many()`` is
+        ONE Spark job (the kernel); a request naming a term the engine
+        has not seen yet adds one term-stats job. The uniqueIds of the
+        hits come from the driver-side id column, which costs about one
+        Python string per indexed doc of driver memory."""
         self.unpin()  # re-pinning must release the previous resident copy
         base = self.tables.postings
         if not need_positions and "pos_bytes" in base.columns:
@@ -1562,8 +1576,13 @@ class SearchEngine:
             .sortWithinPartitions("field", "term")
             .persist()
         )
-        pinned.count()  # materialize the cache before serving
-        self._pinned = pinned
+        # the id column loads in its own small job, concurrent with
+        # the cache build, so pin() pays for the longer of the two
+        with ThreadPoolExecutor(1) as pool:
+            ids = pool.submit(inheritable_thread_target(self._id_column))
+            pinned.count()  # materialize the cache before serving
+            self._pinned = pinned
+            ids.result()
         # warming searches run after the resident copy is live, the
         # analogue of ZuliaShard.tryWarmPrimary after reader refresh
         # (ZuliaShard.java:148-170): pre-populates the query-result
@@ -1577,6 +1596,33 @@ class SearchEngine:
         if self._pinned is not None:
             self._pinned.unpersist()
             self._pinned = None
+        self._ids = None
+
+    def _id_column(self) -> dict[int, np.ndarray]:
+        """uniqueId per (shard, doc_id) on the driver: one object array
+        per shard, indexed by the dense doc_id — the reader a Zulia
+        shard already holds open to read a hit's id. Loaded by one
+        ``doc_map`` read on first use (:meth:`pin` loads it up front)
+        and valid for the engine's life: the uniqueId at a (shard,
+        doc_id) never changes for an IndexTables — deletes only add
+        tombstones, and a refreshed index is a new engine."""
+        if self._ids is None:
+            pdf = (
+                self.tables.doc_map.select("shard", "doc_id", "uniqueId")
+                .toPandas()
+                .sort_values(["shard", "doc_id"])
+            )
+            ids: dict[int, np.ndarray] = {}
+            for shard, g in pdf.groupby("shard", sort=False):
+                doc_ids = g["doc_id"].to_numpy()
+                if not np.array_equal(doc_ids, np.arange(len(doc_ids))):
+                    raise ValueError(
+                        f"doc_map doc_ids of shard {int(shard)} are not dense "
+                        f"0..{len(doc_ids) - 1}; cannot index uniqueIds by doc_id"
+                    )
+                ids[int(shard)] = np.array(g["uniqueId"].tolist(), dtype=object)
+            self._ids = ids
+        return self._ids
 
     def _postings_scan(self, cond, need_positions: bool):
         """Pruned postings scan for a query batch. The positions
@@ -2000,7 +2046,9 @@ class SearchEngine:
 
         self.last_metrics["gather_ms"] = int((_time.perf_counter() - _t_job) * 1000)
         if fetch != "none" and all_topk:
-            self._attach_unique_ids(all_topk)
+            ids = self._id_column()
+            for t in all_topk:
+                t["uniqueId"] = ids[t["shard"]][t["doc_id"]]
         for res in results.values():
             for t in res["topk"]:
                 t.pop("qid", None)
@@ -2327,6 +2375,19 @@ class SearchEngine:
                 matches = matches.where(F.col("shard").isin(ok))
         return matches, False
 
+    def _require_stored(self, *fields: str) -> None:
+        """Reject facet/stat fields that doc_map does not store, before
+        any Spark job runs — otherwise Spark's UNRESOLVED_COLUMN
+        surfaces from deep inside the plan. A dotted name passes when
+        its root column is stored (nested struct access)."""
+        cols = self.tables.doc_map.columns
+        for f in fields:
+            if f not in cols and f.split(".", 1)[0] not in cols:
+                stored = sorted(
+                    c for c in cols if c not in ("shard", "doc_id") and not c.startswith("_z")
+                )
+                raise ValueError(f"field {f!r} is not stored; stored fields: {stored}")
+
     def _facet_scalar(self, df, facet_field: str):
         """Multivalued facet fields count once per DISTINCT value per
         doc (Lucene SortedSetDocValues ordinal semantics — FacetTest
@@ -2364,6 +2425,7 @@ class SearchEngine:
         when the facet is skipped, mirroring the reference client's
         null facet group.
         """
+        self._require_stored(facet_field)
         matches = self.match_ids(req).select("shard", "doc_id")
         matches, skipped = self._facet_hits_guard(matches, max_total_hits, max_shard_hits)
         if skipped:
@@ -2425,6 +2487,7 @@ class SearchEngine:
         """
         from pyspark.sql import Window
 
+        self._require_stored(facet_field)
         if shard_facets == 0:
             if top_n <= 0:
                 raise ValueError("shard_facets=0 (reference default 10*top_n) needs top_n > 0")
@@ -2531,6 +2594,7 @@ class SearchEngine:
         """
         from pyspark.sql import Window
 
+        self._require_stored(facet_field, stat_field)
         if shard_facets == 0:
             if top_n <= 0:
                 raise ValueError(
@@ -2644,6 +2708,7 @@ class SearchEngine:
         (handleListsUniqueValues semantics), including multi-valued
         (array) facet columns.
         """
+        self._require_stored(facet_field)
         matches = self.match_ids(req).select("shard", "doc_id")
         matches, skipped = self._facet_hits_guard(matches, max_total_hits, max_shard_hits)
         if skipped:
@@ -3475,6 +3540,7 @@ class SearchEngine:
         min/max/sum (it ranks after valued labels, nulls-last). Array
         stat columns aggregate element-wise without an explode.
         Honors the maxTotalHits/maxShardHits skip guard (→ None)."""
+        self._require_stored(facet_field, stat_field)
         matches = self.match_ids(req).select("shard", "doc_id")
         matches, skipped = self._facet_hits_guard(matches, max_total_hits, max_shard_hits)
         if skipped:
@@ -4995,18 +5061,3 @@ class SearchEngine:
             "terms": all_terms,
             "termsByField": terms_by_field,
         }
-
-    def _attach_unique_ids(self, topk: list[dict]) -> None:
-        """Result-id → stored-doc join (DocumentScoredDocLeafHandler
-        fetch path): broadcast the tiny id set against doc_map."""
-        pairs = {(t["shard"], t["doc_id"]) for t in topk}
-        spark = self.tables.doc_map.sparkSession
-        ids = spark.createDataFrame(sorted(pairs), "shard int, doc_id long")
-        rows = (
-            self.tables.doc_map.join(F.broadcast(ids), ["shard", "doc_id"])
-            .select("shard", "doc_id", "uniqueId")
-            .collect()
-        )
-        lookup = {(int(r["shard"]), int(r["doc_id"])): r["uniqueId"] for r in rows}
-        for t in topk:
-            t["uniqueId"] = lookup.get((t["shard"], t["doc_id"]))

@@ -839,6 +839,7 @@ def resolve_tree(
     expand_field=None,
     date_fields: frozenset[str] = frozenset(),
     all_fields: tuple[str, ...] = (),
+    configured_fields: frozenset[str] = frozenset(),
 ):
     """Raw AST → resolved AST. ``expand_wildcard(field, regex)`` and
     ``expand_fuzzy(field, term, edits)`` enumerate the term
@@ -852,7 +853,10 @@ def resolve_tree(
     exists-union over them — MatchAllDocsQuery semantics for any doc
     with at least one indexed non-null field (a doc whose indexed
     fields are ALL null is invisible to this form, a documented
-    deviation from Lucene's segment-level match-all)."""
+    deviation from Lucene's segment-level match-all).
+    ``configured_fields`` names the stored columns backed by a
+    FieldConfig: only those of the ``date_fields`` are probed by a
+    bare field PATTERN (``*:2016``)."""
     if expand_field is None:
         expand_field = lambda f: (f,)  # noqa: E731
 
@@ -877,15 +881,19 @@ def resolve_tree(
         if "*" not in pat:
             return ()
         prx = re.compile("^" + ".*".join(re.escape(p) for p in pat.split("*")) + "$")
-        # internal bookkeeping columns (engine ids, _z* meta/quantized
-        # columns) are structurally excluded, the same 5.3.1 rule that
-        # keeps them out of text-pattern expansion
+        # only configured fields are candidates (getMatchingIndexFields
+        # walks the index config, not the stored columns); internal
+        # bookkeeping columns (engine ids, _z* meta/quantized columns)
+        # are structurally excluded even when configured, the same
+        # 5.3.1 rule that keeps them out of text-pattern expansion
         # (FieldWildcardTest internalFieldsExcludedFromWildcardExpansion)
         return tuple(
             sorted(
                 f
-                for f in date_fields
-                if prx.match(f) and not f.startswith("_z") and f not in ("shard", "doc_id")
+                for f in date_fields & configured_fields
+                if prx.match(f)
+                and not f.startswith("_z")
+                and f not in ("shard", "doc_id", "uniqueId")
             )
         )
 
@@ -897,6 +905,7 @@ def resolve_tree(
                 resolve_tree(
                     c, analyze, default_fields, expand_wildcard, expand_fuzzy,
                     default_op, expand_field, date_fields, all_fields,
+                    configured_fields,
                 ),
             )
             for occur, c in node.children

@@ -431,11 +431,6 @@ def _rec(rtype: int, payload: bytes) -> bytes:
     return struct.pack("<HH", rtype, len(payload)) + payload
 
 
-def _short_unistr(s: str) -> bytes:
-    raw = s.encode("latin-1", "ignore")[:255]
-    return struct.pack("<BB", len(raw), 0) + raw
-
-
 def _sst_bytes(strings: list[str]) -> bytes:
     """SST record with CONTINUE spill at the 8224-byte payload cap —
     strings split mid-character-array restate the flag byte, the
