@@ -197,9 +197,8 @@ def test_resolve_clause_rejects_grammar_text():
 
 def test_search_many_routes_docvalues_requests(engine):
     """Batch API: requests whose resolved tree carries doc-values
-    leaves (range conjuncts or SHOULD-position points) no longer
-    raise — they route through the per-request planner while pure
-    postings requests stay in the one batched kernel job."""
+    leaves (range conjuncts or SHOULD-position points) batch with pure
+    postings requests in the one kernel action."""
     reqs = {
         "plain": SearchRequest(qs="alpha", qf=("text",), amount=10),
         "ranged": SearchRequest(qs="alpha AND year:[2005 TO 2020]", qf=("text",), amount=10),

@@ -1,9 +1,8 @@
 """Doc-values leaves (ranges / numeric sets) in NESTED or SHOULD
 boolean positions — Lucene's BooleanQuery accepts IndexOrDocValuesQuery
 clauses anywhere (ZuliaPointRangeQueryNodeBuilder builds them like any
-other clause); the engine's set-algebra path is
-``executor._match_tree_mixed``. The conjunct-split fast path
-(`tree_ranges`) still serves top-level range conjuncts.
+other clause); the engine evaluates them as kernel leaves, so every
+position takes the same evaluator as a top-level range.
 
 Oracle: hand-computed counts/rankings over a 6-doc corpus.
 """
@@ -88,8 +87,8 @@ def test_range_or_scoring_keeps_lexical_order(engine):
 
 
 def test_facets_accept_nested_ranges(engine):
-    # the match_ids fallback powers aggregation surfaces too (qs
-    # carries the full grammar; clause-model q is the mini grammar)
+    # match_ids powers aggregation surfaces too (qs carries the full
+    # grammar; clause-model q is the mini grammar)
     req = SearchRequest(qs="text:alpha OR year>2015", amount=1)
     m = engine.match_ids(req)
     assert m.count() == 5

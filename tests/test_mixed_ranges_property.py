@@ -1,14 +1,14 @@
 """Property test for mixed-position doc-values trees: random nested
 boolean queries (terms + year ranges anywhere, OR-groups with mm,
-AND-groups, AND NOT wraps) evaluated by the engine
-(`executor._match_tree_mixed` or the conjunct fast path — whichever
-the shape selects) must return exactly the doc set a brute-force
-Python evaluator computes over the corpus.
+AND-groups, AND NOT wraps, optional-SHOULD groups) evaluated by the
+engine's one kernel evaluator must return exactly the doc set a
+brute-force Python evaluator computes over the corpus.
 
 The generated grammar is restricted to shapes whose query-string
-parse is unambiguous ("(a OR b)@m", "(a AND b)", "(a AND NOT b)"),
-so the oracle needs no reimplementation of Lucene's infix occur
-logic.
+parse is unambiguous ("(a OR b)@m", "(a AND b)", "(a AND NOT b)",
+"(a +b)"), so the oracle needs no reimplementation of Lucene's infix
+occur logic: in "(a +b)" the explicit ``+`` makes b required and
+leaves a optional, so the group matches exactly b's docs.
 """
 
 import random
@@ -71,7 +71,7 @@ def _gen(rng, depth):
         q = "year:zl:ns(" + " ".join(map(str, vals)) + ")"
         return q, lambda d, vs=set(vals): d[1] in vs
     kids = [_gen(rng, depth - 1) for _ in range(rng.randint(2, 3))]
-    shape = rng.choice(["or", "or_mm", "and", "and_not"])
+    shape = rng.choice(["or", "or_mm", "and", "and_not", "opt_should"])
     if shape == "or":
         q = "(" + " OR ".join(k[0] for k in kids) + ")"
         return q, lambda d, ks=kids: any(f(d) for _, f in ks)
@@ -82,6 +82,9 @@ def _gen(rng, depth):
     if shape == "and":
         q = "(" + " AND ".join(k[0] for k in kids) + ")"
         return q, lambda d, ks=kids: all(f(d) for _, f in ks)
+    if shape == "opt_should":
+        opt, req = kids[0], kids[1]
+        return f"({opt[0]} +{req[0]})", req[1]
     pos, neg = kids[0], kids[1]
     q = f"({pos[0]} AND NOT {neg[0]})"
     return q, lambda d, p=pos[1], n=neg[1]: p(d) and not n(d)

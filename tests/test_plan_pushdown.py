@@ -79,6 +79,25 @@ def test_numeric_set_predicate_pushes_to_parquet(parquet_engine):
     assert "In(n" in pushed, f"IN set must push, got [{pushed}] for {pred!r}"
 
 
+def test_search_string_docvalues_side_pushes_range(parquet_engine, monkeypatch):
+    # the plan a real search runs: the doc_map side of the kernel's
+    # cogroup still carries the range into its parquet scan
+    plans = []
+    df_cls = type(parquet_engine.tables.doc_map)
+    orig = df_cls.toPandas
+
+    def capture(df):
+        plans.append(_pushed_filters(df))
+        return orig(df)
+
+    monkeypatch.setattr(df_cls, "toPandas", capture)
+    res = parquet_engine.search_string("content:alpha AND n:[5 TO 9]", amount=10)
+    monkeypatch.undo()
+    assert sorted(t["uniqueId"] for t in res["topk"]) == ["p0", "p1"]
+    # (an unpinned engine's first search also reads the uniqueId column)
+    assert any("GreaterThanOrEqual(n,5)" in p and "LessThanOrEqual(n,9)" in p for p in plans), plans
+
+
 def test_must_not_range_keeps_nulls(parquet_engine):
     # NOT n:[5 TO 9] keeps p2 (n=20) AND p3 (n NULL) — Lucene MUST_NOT
     res = parquet_engine.search_string("content:alpha AND NOT n:[5 TO 9]", amount=10)

@@ -1,15 +1,16 @@
-"""Doc-values search must never cache wide stored columns.
+"""Doc-values search must never ship wide stored columns.
 
-search_docvalues persists its match∩predicate frame so the top-k cut
-and totalHits share one kernel pass. At 100-TB scale that cache must
-stay O(match-set × 4 narrow columns): if the full doc_map width leaks
-in (text bodies, embeddings), cached bytes grow with match-set size ×
-document width and evict every other table (the round-3 bench showed
-an 8× regression on numeric_set_count plus collateral cache-eviction
-slowdowns on the two sort gates that run right after it). These tests
-pin (a) the persisted schema, and (b) the liveDocs invariant on the
-docvalues entry points (search_docvalues / search_numeric_set route
-through _live_doc_map like every other non-kernel path).
+A doc-values leaf reaches the kernel as one narrow doc_map frame
+cogrouped by shard with the postings: (shard, doc_id, one flag per
+leaf). At 100-TB scale that input must stay O(matched rows × narrow
+columns): if the full doc_map width leaks in (text bodies,
+embeddings), every dv-bearing request moves match-set size ×
+document width through the shuffle and the Arrow transfer (the
+round-3 bench showed an 8× regression on numeric_set_count when a
+wide frame was cached). These tests pin (a) the kernel's doc_map
+input schema, and (b) the liveDocs invariant on the docvalues entry
+points (search_docvalues / search_numeric_set tombstones are masked
+in the kernel like every other leaf).
 """
 
 import pandas as pd
@@ -53,29 +54,29 @@ def _engine(spark):
     return SearchEngine(tables), tables
 
 
-def test_docvalues_persist_is_narrow(spark, monkeypatch):
+def test_docvalues_kernel_input_is_narrow(spark, monkeypatch):
     eng, tables = _engine(spark)
-    persisted_schemas = []
-    # patch the CONCRETE DataFrame class (pyspark.sql.DataFrame is an
-    # abstract base in Spark 4; subclass methods would shadow a patch)
-    df_cls = type(tables.doc_map)
-    orig = df_cls.persist
+    kernel_inputs = []
+    # patch the CONCRETE GroupedData class: the doc-values frame is the
+    # other side of the cogroup that feeds the kernel
+    grouped_cls = type(tables.doc_map.groupBy("shard"))
+    orig = grouped_cls.cogroup
 
-    def capture(df, *a, **kw):
-        persisted_schemas.append(list(df.columns))
-        return orig(df, *a, **kw)
+    def capture(grouped, other):
+        kernel_inputs.append(list(other._df.columns))
+        return orig(grouped, other)
 
-    monkeypatch.setattr(df_cls, "persist", capture)
+    monkeypatch.setattr(grouped_cls, "cogroup", capture)
     try:
         req = SearchRequest((QueryClause("FILTER", q="content:alpha"),), amount=3)
         res = eng.search_docvalues(req, "n BETWEEN 20 AND 80", amount=3)
         assert res["totalHits"] == 7
-        assert persisted_schemas, "search_docvalues no longer persists — update test"
-        for cols in persisted_schemas:
+        assert kernel_inputs, "search_docvalues no longer cogroups doc values — update test"
+        for cols in kernel_inputs:
             assert "body" not in cols and "vec" not in cols, cols
-            # predicate column is consumed by the filter, not cached
+            # predicate column is consumed by the filter, not shipped
             assert "n" not in cols, cols
-            assert set(cols) == {"shard", "doc_id", "score", "uniqueId"}
+            assert set(cols) == {"shard", "doc_id", "_dv0"}
     finally:
         monkeypatch.undo()
         tables.unpersist()

@@ -266,9 +266,9 @@ def q_qs_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def q_range_or_count(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Doc-values ranges in NESTED / SHOULD boolean positions
-    (Lucene accepts IndexOrDocValuesQuery clauses anywhere; engine
-    set-algebra path executor._match_tree_mixed): a range under OR
-    inside an AND group, and a bare lexical-OR-range union."""
+    (Lucene accepts IndexOrDocValuesQuery clauses anywhere; the engine
+    evaluates them as kernel leaves): a range under OR inside an AND
+    group, and a bare lexical-OR-range union."""
     eng = documents_engine(spark, sf_dir)
     h1 = eng.search_string("(n_chars>400 OR window) AND merge", qf=("text",), amount=1)["totalHits"]
     h2 = eng.search_string("scan OR n_chars<=120", qf=("text",), amount=1)["totalHits"]
@@ -1541,9 +1541,8 @@ def q_clause_grammar_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     executor._clauses_to_tree; the reference parses every clause's q
     with ZuliaFlexibleQueryParser, ZuliaIndex.java:946-964). Two
     shapes: a nested-boolean scored clause composed with a FILTER
-    clause whose q is a fielded range (conjunct-split path), and a
-    clause whose q puts a doc-values point leaf in SHOULD position
-    (set-algebra path)."""
+    clause whose q is a fielded range, and a clause whose q puts a
+    doc-values point leaf in SHOULD position."""
     eng = documents_engine(spark, sf_dir)
     range_req = SearchRequest(
         (

@@ -8,17 +8,23 @@ SURVEY.md §3.1) re-expressed for Spark:
    leaves' df/ttf from the term_stats table (a pushdown-pruned scan
    of only the query terms) and field stats (tiny, cached); compute
    per-(term, shard) idf and per-(field, shard) avgdl exactly like
-   Lucene per-shard IndexReader statistics.
+   Lucene per-shard IndexReader statistics. Doc-values leaves
+   (ranges, ``zl:ns`` numeric sets, geo, caller predicates) compile
+   to kernel leaves holding their doc_map SQL (``DocValuesSpec``).
 2. SCATTER: filter the postings table to the query terms — Catalyst
    pushes the (field, term) predicate into the parquet scan so only
    the query terms' blocks are read — then groupBy(shard)
    .applyInPandas(kernel): a per-shard document-at-a-time scoring
    kernel (decode delta-gap varint blocks, dense score accumulation,
    Lucene float32 BM25, boolean clause algebra shared with the
-   oracle), with a **block-max pruning** path (below). Each shard
-   emits its top (start+amount) rows plus a has-more sentinel (the
-   k+1 trick of TopScoreDocCollectorManager(k+1),
-   ShardReader.java:279-307).
+   oracle), with a **block-max pruning** path (below). When a request
+   has doc-values leaves, the scan is instead cogrouped by shard with
+   one narrow doc_map frame — the rows passing any leaf's predicate
+   (pushed into the parquet scan), projected to (shard, doc_id, one
+   flag per leaf) — and each leaf reads its flags as a per-shard mask
+   that scores 0.0. Each shard emits its top (start+amount) rows plus
+   a has-more sentinel (the k+1 trick of
+   TopScoreDocCollectorManager(k+1), ShardReader.java:279-307).
 3. GATHER (driver): merge the per-shard top-k's by
    (score desc, shard asc, doc_id asc) — ZuliaPostSortingComparator
    semantics — sum totalHits and apply `start`
@@ -52,7 +58,7 @@ block we stored (max_tf, min_dl); the kernel:
 
 Safety: UB(d) ≥ score(d) for every matching d and θ ≤ true k-th
 score, so the true top-k ⊆ C — returned docIDs and scores are
-identical to the dense path (asserted in tests/test_pruning.py).
+identical to the dense path (asserted in tests/test_pruning_batch.py).
 Like Lucene's TOP_SCORES, totalHits becomes a lower bound when
 pruning actually skipped anything (`hits_exact=False` in the
 response). If fewer than k matching candidates exist (e.g. zero-score
@@ -82,27 +88,23 @@ from zuliasearch_spark.indexing.tombstones import load_tombstone_uids, save_tomb
 from zuliasearch_spark.search.intervals import doc_candidates as interval_doc_candidates
 from zuliasearch_spark.search.intervals import eval_tree as eval_interval_tree
 from zuliasearch_spark.search.matcher import combine_clauses, evaluate_tree
+from zuliasearch_spark.search.parser import DocValuesSpec
 from zuliasearch_spark.search.parser import ExistsSpec as _ExistsSpecT
 from zuliasearch_spark.search.parser import RGeo as _RGeoT
 from zuliasearch_spark.search.parser import RNumericSet as _RNumericSetT
-from zuliasearch_spark.search.parser import RRange as RRangeT
+from zuliasearch_spark.search.parser import RRange as _RRangeT
 from zuliasearch_spark.search.parser import (
     MUST as _MUST,
     MUST_NOT as _MUST_NOT,
     SHOULD as _SHOULD,
-    ParseError,
     RBool,
     RLeaf,
     apply_global_mm,
     parse_query,
     resolve_tree,
-    strip_ranges as _strip_ranges,
     tree_has_positive_leaf,
-    tree_ranges,
     tree_stat_keys,
 )
-
-_TREE_SENTINEL = "\x00tree\x00"  # cache key for a pre-stripped AST
 
 
 def _require_nonzero_query_vector(vector) -> None:
@@ -733,12 +735,17 @@ def _subset_term_vectors(store, n_sub, shard, idf_by_key, avgdl_by_key, params, 
     return term_vectors
 
 
-def _dense_term_vectors(store, n, shard, idf_by_key, avgdl_by_key, params, sims=None):
+def _dense_term_vectors(store, n, shard, idf_by_key, avgdl_by_key, params, sims=None, dv=None):
+    """``dv`` maps each doc-values leaf's SQL to the shard's mask of
+    flagged docs (:func:`_dv_masks`)."""
     sims = sims or {}
 
     def term_vectors(spec, boost: float) -> tuple[np.ndarray, np.ndarray]:
         mask = np.zeros(n, dtype=bool)
         score = np.zeros(n, dtype=np.float64)
+        if isinstance(spec, DocValuesSpec):
+            # doc-values leaf: the flagged docs, score 0.0
+            return dv[spec.sql], score
         if isinstance(spec, _ExistsSpecT):
             # field:* — constant-score over the norms stream
             # (FieldExistsQuery semantics)
@@ -793,18 +800,42 @@ def _dense_term_vectors(store, n, shard, idf_by_key, avgdl_by_key, params, sims=
     return term_vectors
 
 
+def _leaf_specs(tree, resolved):
+    """Every leaf spec of a request: its tree's, else its clauses'."""
+    if tree is None:
+        for rc in resolved:
+            yield from rc.specs
+        return
+    stack = [tree]
+    while stack:
+        node = stack.pop()
+        if isinstance(node, RBool):
+            stack.extend(c for _, c in node.children)
+        else:
+            yield from node.specs
+
+
+def _stat_keys(tree, resolved) -> set:
+    """(field, term) keys whose stats and postings a request reads."""
+    return tree_stat_keys(tree) if tree is not None else iter_stat_keys(resolved)
+
+
 def _has_phrase(tree, resolved) -> bool:
     """Does the request need the positions stream?"""
-    positional = (PhraseSpec, IntervalSpec)
-    if tree is not None:
-        def walk(node):
-            if isinstance(node, RBool):
-                return any(walk(c) for _, c in node.children)
-            specs = getattr(node, "specs", ())
-            return any(isinstance(s, positional) for s in specs)
+    return any(isinstance(s, (PhraseSpec, IntervalSpec)) for s in _leaf_specs(tree, resolved))
 
-        return walk(tree)
-    return any(isinstance(s, positional) for rc in resolved for s in rc.specs)
+
+def _dv_masks(dv_pdf, dv_sqls, n: int) -> dict[str, np.ndarray]:
+    """One shard's doc-values frame (doc_id + one flag column per
+    leaf, ``_dv<i>`` for ``dv_sqls[i]``) → {leaf SQL: mask over the
+    shard's n docs}."""
+    docs = dv_pdf["doc_id"].to_numpy(dtype=np.int64)
+    out = {}
+    for i, sql in enumerate(dv_sqls):
+        mask = np.zeros(n, dtype=bool)
+        mask[docs[dv_pdf[f"_dv{i}"].to_numpy(dtype=bool)]] = True
+        out[sql] = mask
+    return out
 
 
 def _date_period(v: str) -> tuple[str, str, str, str]:
@@ -984,6 +1015,18 @@ def _apply_tombstones(match: np.ndarray, deleted) -> None:
         match[d] = False
 
 
+def _dense_match(plan: _QueryPlan, store, shard, n, idf_by_key, avgdl_by_key, params, deleted, dv):
+    """(match mask, scores) of one request over one shard's dense doc
+    space, tombstoned docs unmatched."""
+    tv = _dense_term_vectors(store, n, shard, idf_by_key, avgdl_by_key, params, dict(plan.sims), dv)
+    if plan.tree is not None:
+        match, total = evaluate_tree(plan.tree, tv, n, params.lucene_parity)
+    else:
+        match, total = combine_clauses(list(plan.resolved), tv, n, params.lucene_parity)
+    _apply_tombstones(match, deleted)
+    return match, total
+
+
 def _run_query_on_shard(
     plan: _QueryPlan,
     store: PostingsStore,
@@ -993,6 +1036,7 @@ def _run_query_on_shard(
     avgdl_by_key,
     params: Bm25Params,
     deleted=None,
+    dv=None,
 ):
     """Execute one request against one shard's postings.
 
@@ -1011,12 +1055,7 @@ def _run_query_on_shard(
             return result
 
     # dense path: exact totalHits, exact top-k
-    tv = _dense_term_vectors(store, n, shard, idf_by_key, avgdl_by_key, params, dict(plan.sims))
-    if plan.tree is not None:
-        match, total = evaluate_tree(plan.tree, tv, n, params.lucene_parity)
-    else:
-        match, total = combine_clauses(resolved, tv, n, params.lucene_parity)
-    _apply_tombstones(match, deleted)
+    match, total = _dense_match(plan, store, shard, n, idf_by_key, avgdl_by_key, params, deleted, dv)
     total_hits = int(match.sum())
     idx = np.flatnonzero(match)
     top, tscores, has_next, next_score = _rank_and_page(idx, total[idx], after, k)
@@ -1121,118 +1160,73 @@ def _finish(docs, scores, after, k):
     return top, tscores, int(docs.size), has_next, next_score, True
 
 
-def _make_batch_kernel(
+def _make_kernel(
     plans: list[_QueryPlan],
     idf_by_key: dict[tuple[str, str, int], float],
     avgdl_by_key: dict[tuple[str, int], float],
     params: Bm25Params,
     n_docs_by_shard: dict[int, int],
     tombstones: dict[int, "np.ndarray"] | None = None,
+    dv_sqls: tuple[str, ...] = (),
+    full_match: bool = False,
 ):
-    """Per-shard kernel scoring EVERY request against the decoded blocks."""
+    """Per-shard kernel scoring EVERY request against the decoded
+    blocks and the shard's doc-values flags (``dv_pdf``, None when no
+    request has a doc-values leaf). Emits each request's top rows
+    (KERNEL_SCHEMA) or, with ``full_match``, the one request's whole
+    match set (MATCH_SCHEMA) — the input of facets and stats, which
+    run doc-at-a-time over the match set in the reference
+    (AggregationHandler.java:256-281)."""
+    schema = MATCH_SCHEMA if full_match else KERNEL_SCHEMA
+    columns = [c.split()[0] for c in schema.split(", ")]
 
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
+    def kernel(key, pdf: pd.DataFrame, dv_pdf: pd.DataFrame | None) -> pd.DataFrame:
         shard = int(key[0])
         store = PostingsStore(pdf)
         n = n_docs_by_shard.get(shard, 0)
         if n == 0:
-            if store.blocks_total == 0:
-                return pd.DataFrame(
-                    columns=[
-                        "qid", "shard", "doc_id", "score", "total_hits",
-                        "next_score", "has_next", "hits_exact",
-                        "blocks_decoded", "blocks_total",
-                    ]
-                )
-            n = int(store.last_doc.max()) + 1
+            if store.blocks_total:
+                n = int(store.last_doc.max()) + 1
+            if dv_pdf is not None and len(dv_pdf):
+                n = max(n, int(dv_pdf["doc_id"].max()) + 1)
+            if n == 0:
+                return pd.DataFrame(columns=columns)
         deleted = (tombstones or {}).get(shard)
+        dv = _dv_masks(dv_pdf, dv_sqls, n) if dv_pdf is not None else None
+        if full_match:
+            match, total = _dense_match(
+                plans[0], store, shard, n, idf_by_key, avgdl_by_key, params, deleted, dv
+            )
+            idx = np.flatnonzero(match)
+            return pd.DataFrame(
+                {"shard": np.int32(shard), "doc_id": idx.astype(np.int64), "score": total[idx]}
+            )
         frames = []
         for plan in plans:
             top, tscores, total_hits, has_next, next_score, hits_exact = _run_query_on_shard(
-                plan, store, shard, n, idf_by_key, avgdl_by_key, params, deleted
+                plan, store, shard, n, idf_by_key, avgdl_by_key, params, deleted, dv
             )
+            if top.size == 0:
+                # still report totalHits/metrics for this shard
+                top, tscores = np.array([-1], dtype=np.int64), np.array([np.nan])
             frames.append(
                 pd.DataFrame(
                     {
                         "qid": plan.qid,
                         "shard": np.int32(shard),
-                        "doc_id": top.astype(np.int64) if top.size else np.empty(0, dtype=np.int64),
+                        "doc_id": top.astype(np.int64),
                         "score": tscores,
                         "total_hits": np.int64(total_hits),
                         "next_score": next_score,
                         "has_next": has_next,
                         "hits_exact": hits_exact,
-                        "blocks_decoded": np.int64(0),
-                        "blocks_total": np.int64(0),
                     }
                 )
             )
-            if top.size == 0:
-                # still report totalHits/metrics for this shard
-                frames[-1] = pd.DataFrame(
-                    {
-                        "qid": [plan.qid],
-                        "shard": [np.int32(shard)],
-                        "doc_id": [np.int64(-1)],
-                        "score": [float("nan")],
-                        "total_hits": [np.int64(total_hits)],
-                        "next_score": [next_score],
-                        "has_next": [has_next],
-                        "hits_exact": [hits_exact],
-                        "blocks_decoded": [np.int64(0)],
-                        "blocks_total": [np.int64(0)],
-                    }
-                )
         out = pd.concat(frames, ignore_index=True)
         out["blocks_decoded"] = np.int64(store.blocks_decoded)
         out["blocks_total"] = np.int64(store.blocks_total)
         return out
-
-    return kernel
-
-
-def _make_match_kernel(
-    resolved: list[ResolvedClause],
-    idf_by_key: dict[tuple[str, str, int], float],
-    avgdl_by_key: dict[tuple[str, int], float],
-    params: Bm25Params,
-    n_docs_by_shard: dict[int, int],
-    tombstones: dict[int, "np.ndarray"] | None = None,
-    tree: "RBool | None" = None,
-):
-    """Kernel variant emitting the FULL match set (for facets/stats).
-
-    Mirrors the reference's aggregation flow: facets and numeric stats
-    run doc-at-a-time over the intersected match set
-    (AggregationHandler.java:256-281); here the match set becomes a
-    DataFrame that joins doc_map and feeds ordinary groupBy/agg.
-    """
-    empty = pd.DataFrame(
-        {
-            "shard": pd.Series(dtype=np.int32),
-            "doc_id": pd.Series(dtype=np.int64),
-            "score": pd.Series(dtype=np.float64),
-        }
-    )
-
-    def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
-        shard = int(key[0])
-        store = PostingsStore(pdf)
-        if store.blocks_total == 0:
-            return empty
-        n = n_docs_by_shard.get(shard, 0)
-        if n == 0:
-            n = int(store.last_doc.max()) + 1
-        tv = _dense_term_vectors(store, n, shard, idf_by_key, avgdl_by_key, params)
-        if tree is not None:
-            match, total = evaluate_tree(tree, tv, n, params.lucene_parity, root_fixup=False)
-        else:
-            match, total = combine_clauses(resolved, tv, n, params.lucene_parity)
-        _apply_tombstones(match, (tombstones or {}).get(shard))
-        idx = np.flatnonzero(match)
-        return pd.DataFrame(
-            {"shard": np.int32(shard), "doc_id": idx.astype(np.int64), "score": total[idx]}
-        )
 
     return kernel
 
@@ -1382,7 +1376,7 @@ class SearchEngine:
                 key = ("clauses", req.clauses, req.qf, req.default_op, req.mm)
                 tree = self._resolve_cache.get(key)
                 if tree is None:
-                    tree = self._clauses_to_tree(req)
+                    tree = self._compile_docvalues(self._clauses_to_tree(req))
                     if len(self._resolve_cache) < 4096:
                         self._resolve_cache[key] = tree
                 return [], tree
@@ -1391,10 +1385,30 @@ class SearchEngine:
         tree = self._resolve_cache.get(key)
         if tree is None:
             fields = tuple(req.qf) or self.config.default_search_fields
-            tree = self._resolve_qs_tree(req.qs, fields, req.default_op, req.mm)
+            tree = self._compile_docvalues(
+                self._resolve_qs_tree(req.qs, fields, req.default_op, req.mm)
+            )
             if len(self._resolve_cache) < 4096:
                 self._resolve_cache[key] = tree
         return [], tree
+
+    def _compile_docvalues(self, node):
+        """Copy of a resolved tree whose RRange / RNumericSet / RGeo
+        nodes are kernel leaves: each becomes an RLeaf holding one
+        :class:`DocValuesSpec` with the node's doc_map SQL, so one
+        evaluator (matcher.evaluate_tree) handles every boolean shape
+        — Lucene's BooleanQuery takes IndexOrDocValuesQuery clauses
+        anywhere (SetQueryHelper.java:45-106)."""
+        if isinstance(node, RBool):
+            return RBool(
+                tuple((o, self._compile_docvalues(c)) for o, c in node.children),
+                node.mm,
+                node.boost,
+            )
+        if isinstance(node, (_RRangeT, _RNumericSetT, _RGeoT)):
+            sql = self._range_predicate([(_MUST, node)])
+            return RLeaf((DocValuesSpec(sql),), conj=False, boost=1.0)
+        return node
 
     def _resolve_qs_tree(self, qs: str, fields, default_op: str, mm: int):
         """Parse + resolve one query string into an RBool tree."""
@@ -1557,7 +1571,9 @@ class SearchEngine:
 
         Pinned, a postings-class ``search()`` or ``search_many()`` is
         ONE Spark job (the kernel); a request naming a term the engine
-        has not seen yet adds one term-stats job. The uniqueIds of the
+        has not seen yet adds one term-stats job, and a call with
+        doc-values leaves adds the shuffle map stage of its doc_map
+        side (doc_map is not resident). The uniqueIds of the
         hits come from the driver-side id column, which costs about one
         Python string per indexed doc of driver memory."""
         self.unpin()  # re-pinning must release the previous resident copy
@@ -1664,9 +1680,11 @@ class SearchEngine:
         return dc, sd
 
     def _plan(self, specs: set[tuple[str, str]]):
-        """Per-(term, shard) idf + per-(field, shard) avgdl + scan predicate."""
+        """Per-(term, shard) idf + per-(field, shard) avgdl + scan
+        predicate (always false without specs: a doc-values-only call
+        reads no postings)."""
         if not specs:
-            return None
+            return {}, {}, F.lit(False)
         df_by_key = self._collect_term_stats(specs)
         shards = self._shards()
 
@@ -1756,7 +1774,7 @@ class SearchEngine:
         import time as _time
 
         t0 = _time.perf_counter_ns()
-        out = self._search_one(req, fetch)
+        out = self.search_many({"q": req}, fetch=fetch)["q"]
         load_ns = _time.perf_counter_ns() - t0
         out["fullyCached"] = False
         out["shardsCached"] = 0
@@ -1820,7 +1838,8 @@ class SearchEngine:
     def search_many(
         self, reqs: dict[str, SearchRequest], fetch: str = "ids", oversample: bool = False
     ) -> dict[str, dict]:
-        """Execute many requests in ONE Spark job (module docstring).
+        """Execute many requests in ONE kernel action (module
+        docstring), doc-values-bearing requests included.
 
         ``oversample=True`` reproduces the reference's shard request
         sizing: each shard is asked for only ``((k/numShards) +
@@ -1834,44 +1853,17 @@ class SearchEngine:
         QueryRequestFederator.java:95-105). Final results are
         identical to the exact path; the oversampled first pass just
         moves less data per shard."""
-        shards = self._shards()
-        resolved_by_qid: dict[str, list[ResolvedClause]] = {}
-        tree_by_qid: dict[str, "RBool | None"] = {}
-        keys_by_qid: dict[str, set] = {}
-        dv_results: dict[str, dict] = {}
-        for qid, r in reqs.items():
-            resolved, tree = self._resolve_request(r)
-            if tree is not None:
-                # doc-values leaves (range conjuncts or nested/SHOULD
-                # positions) compose with doc_map scans rather than the
-                # batch postings kernel: run those requests through the
-                # per-request router and batch the rest. One extra job
-                # per dv-bearing request — the common serving stream is
-                # pure postings queries, which all stay in ONE job.
-                try:
-                    has_dv = bool(tree_ranges(tree))
-                except ParseError:
-                    has_dv = True
-                if has_dv:
-                    dv_results[qid] = self._search_one(r, fetch)
-                    continue
-            resolved_by_qid[qid] = resolved
-            tree_by_qid[qid] = tree
-            keys_by_qid[qid] = tree_stat_keys(tree) if tree is not None else iter_stat_keys(resolved)
-        if dv_results and not resolved_by_qid and not tree_by_qid:
-            return dv_results
-        reqs = {q: r for q, r in reqs.items() if q not in dv_results}
-        all_specs: set[tuple[str, str]] = set()
-        for ks in keys_by_qid.values():
-            all_specs |= ks
-        plan = self._plan(all_specs)
-        results: dict[str, dict] = {}
-        if plan is None:
-            out = {qid: {"totalHits": 0, "topk": [], "hitsExact": True} for qid in reqs}
-            out.update(dv_results)
-            return out
-        idf_by_key, avgdl_by_key, cond = plan
+        return self._search_resolved(
+            {qid: (r, *self._resolve_request(r)) for qid, r in reqs.items()}, fetch, oversample
+        )
 
+    def _search_resolved(self, entries: dict, fetch: str = "ids", oversample: bool = False) -> dict[str, dict]:
+        """:meth:`search_many` over requests already resolved:
+        ``entries`` maps qid → (request, resolved clauses, tree)."""
+        shards = self._shards()
+        reqs = {qid: e[0] for qid, e in entries.items()}
+        resolved_by_qid = {qid: e[1] for qid, e in entries.items()}
+        tree_by_qid = {qid: e[2] for qid, e in entries.items()}
         # purely-negative queries take the MatchAll fix-up in the
         # gather (driver-side page from shard_counts) — their kernel
         # rows must never be undersized, so they are exempt from
@@ -1890,6 +1882,7 @@ class SearchEngine:
         qplans: list[_QueryPlan] = []
         k_by_qid: dict[str, int] = {}
         for qid, req in reqs.items():
+            resolved, tree = resolved_by_qid[qid], tree_by_qid[qid]
             after = {
                 s: a
                 for s in shards
@@ -1911,28 +1904,22 @@ class SearchEngine:
             qplans.append(
                 _QueryPlan(
                     qid=qid,
-                    resolved=tuple(resolved_by_qid[qid]),
+                    resolved=tuple(resolved),
                     per_shard_amount=k_shard,
                     after_by_shard=after,
                     prune=bool(req.block_max_pruning),
-                    sims=self._effective_sims(req, {f for f, _ in keys_by_qid[qid]}),
-                    tree=tree_by_qid[qid],
+                    sims=self._effective_sims(req, {f for f, _ in _stat_keys(tree, resolved)}),
+                    tree=tree,
                 )
             )
 
-        kernel = _make_batch_kernel(
-            qplans, idf_by_key, avgdl_by_key, self.params, self._shard_counts, self._tombstone_arrays()
-        )
-        scan = self._postings_scan(
-            cond,
-            any(
-                _has_phrase(tree_by_qid[qid], resolved_by_qid[qid]) for qid in reqs
-            ),
-        )
+        frame = self._kernel_frame(qplans)
+        if frame is None:
+            return {qid: {"totalHits": 0, "topk": [], "hitsExact": True} for qid in reqs}
         import time as _time
 
         _t0 = _time.perf_counter()
-        pdf = scan.groupBy("shard").applyInPandas(kernel, KERNEL_SCHEMA).toPandas()
+        pdf = frame.toPandas()
         _t_job = _time.perf_counter()
 
         # vectorized gather (QueryCombiner semantics in pandas C):
@@ -1970,6 +1957,7 @@ class SearchEngine:
                     {"shard": int(row.shard), "doc_id": int(row.doc_id), "score": float(row.score), "qid": row.qid}
                 )
 
+        results: dict[str, dict] = {}
         th_map = qstats["total_hits"].to_dict()
         he_map = qstats["hits_exact"].to_dict()
         all_topk: list[dict] = []
@@ -2035,9 +2023,7 @@ class SearchEngine:
                     short.append(qid)
             if short:
                 outer_metrics = self.last_metrics
-                exact = self.search_many(
-                    {q: reqs[q] for q in short}, fetch="none", oversample=False
-                )
+                exact = self._search_resolved({q: entries[q] for q in short}, fetch="none")
                 self.last_metrics = outer_metrics
                 self.last_metrics["retried"] = len(short)
                 for q in short:
@@ -2052,8 +2038,49 @@ class SearchEngine:
         for res in results.values():
             for t in res["topk"]:
                 t.pop("qid", None)
-        results.update(dv_results)
         return results
+
+    def _kernel_frame(self, plans: list[_QueryPlan], full_match: bool = False):
+        """The one kernel action behind every search entry point, as a
+        lazy frame (None when no request reads postings or doc values).
+
+        The postings scan of the plans' terms is grouped by shard — a
+        pinned index is already shard-partitioned, so that is no
+        shuffle. When some request has a doc-values leaf, the scan is
+        cogrouped by shard with ONE narrow doc_map frame: the rows
+        passing any leaf's predicate (the bare OR reaches the parquet
+        scan as PushedFilters), projected to (shard, doc_id, one
+        null-safe flag per leaf)."""
+        keys: set = set()
+        dv_sqls: set[str] = set()
+        for p in plans:
+            keys |= _stat_keys(p.tree, p.resolved)
+            dv_sqls.update(
+                s.sql for s in _leaf_specs(p.tree, p.resolved) if isinstance(s, DocValuesSpec)
+            )
+        if not keys and not dv_sqls:
+            return None
+        dv_sqls = tuple(sorted(dv_sqls))
+        idf_by_key, avgdl_by_key, cond = self._plan(keys)
+        kernel = _make_kernel(
+            plans, idf_by_key, avgdl_by_key, self.params, self._shard_counts,
+            self._tombstone_arrays(), dv_sqls, full_match,
+        )
+        scan = self._postings_scan(cond, any(_has_phrase(p.tree, p.resolved) for p in plans))
+        schema = MATCH_SCHEMA if full_match else KERNEL_SCHEMA
+        if not dv_sqls:
+            return scan.groupBy("shard").applyInPandas(
+                lambda key, pdf: kernel(key, pdf, None), schema
+            )
+        flags = [
+            F.coalesce(F.expr(sql), F.lit(False)).alias(f"_dv{i}")
+            for i, sql in enumerate(dv_sqls)
+        ]
+        dv = (
+            self.tables.doc_map.filter(" OR ".join(f"({sql})" for sql in dv_sqls))
+            .select("shard", "doc_id", *flags)
+        )
+        return scan.groupBy("shard").cogroup(dv.groupBy("shard")).applyInPandas(kernel, schema)
 
     def search_string(
         self,
@@ -2067,11 +2094,10 @@ class SearchEngine:
     ) -> dict:
         """Search with the Zulia query-string syntax (search.parser).
 
-        Range conjuncts (``field:[a TO b]``, ``field>=v``) evaluate
-        against doc_map columns via a Catalyst-pushed predicate
-        semi-joined with the postings match set — the
-        IndexOrDocValuesQuery split (SetQueryHelper.java:45-106).
-        Everything else runs in the sharded postings kernel.
+        Every leaf runs in the sharded postings kernel; doc-values
+        leaves (``field:[a TO b]``, ``field>=v``, ``zl:ns``, geo) read
+        their per-shard masks from a Catalyst-pushed doc_map predicate
+        (:meth:`_kernel_frame`), anywhere in the boolean tree.
         """
         req = SearchRequest(
             qs=q, qf=tuple(qf), default_op=default_op, mm=mm,
@@ -2079,75 +2105,25 @@ class SearchEngine:
         )
         return self.search(req)
 
-    def _search_one(self, req: SearchRequest, fetch: str = "ids") -> dict:
-        """Route one request by its resolved shape (shared by
-        search() for both the qs= and clause models): range conjuncts
-        take the IndexOrDocValuesQuery split, nested/SHOULD doc-values
-        leaves the set-algebra path, everything else the sharded
-        postings kernel via search_many."""
-        _, tree = self._resolve_request(req)
-        if tree is not None:
-            try:
-                ranges = tree_ranges(tree)
-            except ParseError:
-                # doc-values leaves in nested/SHOULD positions:
-                # set-algebra evaluation (Lucene accepts range
-                # clauses anywhere)
-                return self._search_tree_mixed(tree, req, req.amount, req.start)
-            if ranges:
-                return self._search_tree_ranges(tree, req, ranges)
-        return self.search_many({"q": req}, fetch=fetch)["q"]
-
-    def _search_tree_ranges(self, tree, req: SearchRequest, ranges) -> dict:
-        """Range conjuncts: doc-values predicate over doc_map columns
-        semi-joined with the postings match set — the
-        IndexOrDocValuesQuery split (SetQueryHelper.java:45-106)."""
-        pred = self._range_predicate(ranges)
-        stripped = _strip_ranges(tree)
-        if stripped is None or not tree_has_positive_leaf(stripped):
-            # pure doc-values query: filter LIVE doc_map directly
-            # (tombstoned docs never resurface through ranges)
-            allowed = self._live_doc_map().filter(pred)
-            rows = (
-                allowed.orderBy(F.asc("shard"), F.asc("doc_id"))
-                .limit(req.start + req.amount)
-                .select("shard", "doc_id", "uniqueId")
-                .collect()
-            )
-            total = allowed.count()
-            topk = [
-                {"shard": int(r["shard"]), "doc_id": int(r["doc_id"]), "score": 0.0, "uniqueId": r["uniqueId"]}
-                for r in rows[req.start : req.start + req.amount]
-            ]
-            return {"totalHits": int(total), "topk": topk, "hitsExact": True}
-        sreq = SearchRequest(
-            qs=_TREE_SENTINEL, qf=req.qf, default_op=req.default_op, mm=req.mm,
-            amount=req.amount, start=req.start, similarities=req.similarities,
-        )
-        self._resolve_cache[
-            ("qs", _TREE_SENTINEL, sreq.qf, sreq.default_op, sreq.mm)
-        ] = stripped
-        return self.search_docvalues(sreq, pred, amount=req.amount)
-
     def _range_predicate(self, ranges) -> str:
-        """RRange / RNumericSet conjuncts → one SQL predicate over
-        doc_map columns (numeric when the column is numeric, else
-        string compare). Field-mapping aliases OR their expanded
-        targets.
+        """(MUST, RRange / RNumericSet / RGeo) leaves → one SQL
+        predicate over doc_map columns, ANDed (numeric when the column
+        is numeric, else string compare). Field-mapping aliases OR
+        their expanded targets.
 
-        Null handling is OCCUR-dependent, and the shapes differ for a
-        scale reason: a positive conjunct emits the BARE predicate —
-        WHERE already treats NULL as false, and bare comparisons reach
-        the parquet scan as PushedFilters (row-group/page min-max
-        skipping; a coalesce() wrapper makes the whole filter opaque
-        to pushdown and forces a full doc_map scan — verified in
-        tests/test_plan_pushdown.py). Only MUST_NOT wraps each alt in
-        coalesce(..., false) before negating, so docs WITHOUT the
-        field are kept — Lucene MUST_NOT semantics; negated filters
-        can't prune min-max ranges anyway, so nothing is lost there."""
+        The predicate is BARE: WHERE treats NULL as false, and bare
+        comparisons reach the parquet scan as PushedFilters
+        (row-group/page min-max skipping; a coalesce() wrapper makes
+        the whole filter opaque to pushdown and forces a full doc_map
+        scan — verified in tests/test_plan_pushdown.py). Negation is
+        not compiled here: the kernel applies MUST_NOT to the leaf's
+        mask, and a doc WITHOUT the field is never flagged, so it is
+        kept — Lucene MUST_NOT semantics."""
         dtypes = dict(self.tables.doc_map.dtypes)
         parts = []
         for occur, r in ranges:
+            if occur != _MUST:
+                raise ValueError(f"doc-values predicates compile MUST leaves only, got {occur}")
             # lenient = pattern-expanded field list spanning types: a
             # field the value can't parse for (or that isn't stored)
             # matches nothing instead of failing the query
@@ -2160,15 +2136,7 @@ class SearchEngine:
                     if not lenient:
                         raise
                     alts.append("(1=0)")
-            if occur == "MUST_NOT":
-                # null-safe ONLY under negation: NOT coalesce(p, false)
-                # keeps docs without the field (Lucene MUST_NOT)
-                p = " OR ".join(f"coalesce({a}, false)" for a in alts)
-                parts.append(f"NOT ({p})")
-            else:
-                # bare predicates: NULL is false in a WHERE filter and
-                # the comparisons stay parquet-pushable
-                parts.append("(" + " OR ".join(alts) + ")")
+            parts.append("(" + " OR ".join(alts) + ")")
         return " AND ".join(parts)
 
     def _range_alt_sql(self, fld: str, r, dtypes: dict) -> str:
@@ -2273,62 +2241,31 @@ class SearchEngine:
         The entry point for aggregations: facets/stats join this match
         set against doc_map, the Spark equivalent of the reference's
         doc-at-a-time facet/stat pass over the intersected iterators
-        (AggregationHandler.java:256-281). Requires at least one
+        (AggregationHandler.java:256-281). It is the kernel action of
+        :meth:`search` emitting the whole match set, so doc-values
+        leaves compose anywhere in the query. Requires at least one
         positive clause (a purely-negative match-all set should be
         computed as doc_map anti-join instead).
         """
         resolved, tree = self._resolve_request(req)
         if tree is not None:
-            try:
-                ranges = tree_ranges(tree)
-            except ParseError:
-                # nested/SHOULD doc-values leaves: set-algebra path, so
-                # facets/stats/percentiles accept them too
-                return self._match_tree_mixed(tree, req)
-            if ranges:
-                # range conjuncts take the IndexOrDocValuesQuery split
-                # (SetQueryHelper.java:45-106), same composition as
-                # search_string: doc-values predicate over doc_map
-                # columns semi-joined with the postings match set — so
-                # every aggregation surface built on match_ids
-                # (facets, stats, percentiles) accepts DATE/numeric
-                # ranges anywhere in the query, like the reference's
-                # filter queries (DateStringTest + StatTest compose)
-                pred = self._range_predicate(ranges)
-                allowed = self._live_doc_map().filter(pred).select("shard", "doc_id")
-                stripped = _strip_ranges(tree)
-                if stripped is None or not tree_has_positive_leaf(stripped):
-                    # pure doc-values match set: constant score, the
-                    # same contract as search_string's pure-range path
-                    return allowed.withColumn("score", F.lit(0.0))
-                sreq = SearchRequest(
-                    qs=_TREE_SENTINEL, qf=req.qf,
-                    default_op=req.default_op, mm=req.mm,
-                    amount=req.amount, start=req.start,
-                    similarities=req.similarities,
-                )
-                self._resolve_cache[
-                    ("qs", _TREE_SENTINEL, sreq.qf, sreq.default_op, sreq.mm)
-                ] = stripped
-                base = self.match_ids(sreq)
-                return base.join(allowed, ["shard", "doc_id"])
             if not tree_has_positive_leaf(tree):
                 raise ValueError("match_ids needs a positive clause")
-            keys = tree_stat_keys(tree)
-        else:
-            if resolved and all(rc.clause.negative for rc in resolved):
-                raise ValueError("match_ids needs a positive clause; anti-join doc_map for pure negations")
-            keys = iter_stat_keys(resolved)
-        plan = self._plan(keys)
-        if plan is None:
-            raise ValueError("empty query")
-        idf_by_key, avgdl_by_key, cond = plan
-        kernel = _make_match_kernel(
-            resolved, idf_by_key, avgdl_by_key, self.params, self._shard_counts,
-            self._tombstone_arrays(), tree=tree,
+        elif resolved and all(rc.clause.negative for rc in resolved):
+            raise ValueError("match_ids needs a positive clause; anti-join doc_map for pure negations")
+        plan = _QueryPlan(
+            qid="q",
+            resolved=tuple(resolved),
+            per_shard_amount=0,
+            after_by_shard={},
+            prune=False,
+            sims=self._effective_sims(req, {f for f, _ in _stat_keys(tree, resolved)}),
+            tree=tree,
         )
-        scan = self._postings_scan(cond, _has_phrase(tree, resolved))
-        return scan.groupBy("shard").applyInPandas(kernel, MATCH_SCHEMA)
+        frame = self._kernel_frame([plan], full_match=True)
+        if frame is None:
+            raise ValueError("empty query")
+        return frame
 
     @staticmethod
     def _facet_top_n(top_n: int) -> int | None:
@@ -2934,200 +2871,25 @@ class SearchEngine:
         The reference's IndexOrDocValuesQuery path (SetQueryHelper.java:
         45-106; numeric ranges ZuliaPointRangeQueryNodeBuilder): range/
         set predicates on non-inverted fields evaluate against doc
-        values instead of postings. Here the predicate filters the LIVE
-        doc_map (Catalyst pushes it into the scan; tombstones masked by
-        the same `_live_doc_map` invariant as every other non-kernel
-        path) and semi-joins the match set BEFORE the top-k cut, so
-        totalHits and ranking see only passing docs.
-
-        Scale note: the persisted frame is pruned to exactly
-        (shard, doc_id, score, uniqueId) BEFORE the persist — the
-        predicate columns are consumed by the filter and dropped, and
-        wide stored columns (text, embeddings) must never enter the
-        cache: cached bytes would grow with match-set size × document
-        width instead of with k (tests/test_plan_width.py pins this).
+        values instead of postings. Here the request's tree gains one
+        MUST doc-values leaf holding ``predicate`` (it adds no score)
+        and runs as :meth:`search` does — one kernel action, so
+        ``start``, ``last_result``, tombstones and the result shape
+        behave exactly as on any other request.
         """
-        matches = self.match_ids(req)
-        allowed = self._live_doc_map().filter(predicate).select(
-            "shard", "doc_id", "uniqueId"
-        )
-        j = (
-            matches.select("shard", "doc_id", "score")
-            .join(allowed, ["shard", "doc_id"])
-            .persist()
-        )
-        try:
-            top = (
-                j.orderBy(F.desc("score"), F.asc("shard"), F.asc("doc_id"))
-                .limit(amount)
-                .select("shard", "doc_id", "score", "uniqueId")
-                .collect()
-            )
-            total = j.count()  # reuses the persisted match set: one kernel pass
-        finally:
-            j.unpersist()
-        return {
-            "totalHits": int(total),
-            "topk": [
-                {"shard": int(r["shard"]), "doc_id": int(r["doc_id"]), "score": float(r["score"]), "uniqueId": r["uniqueId"]}
-                for r in top
-            ],
-            "hitsExact": True,
-        }
+        import dataclasses
 
-    def _match_tree_mixed(self, tree, req: SearchRequest) -> DataFrame:
-        """Match set for a tree whose doc-values leaves (ranges /
-        numeric sets / geo) sit in NESTED or SHOULD positions — shapes
-        the conjunct-split path (``tree_ranges``) rejects, but which
-        Lucene's BooleanQuery accepts anywhere
-        (IndexOrDocValuesQuery scorers compose like any other clause).
-
-        Set-algebra evaluation mirroring ``matcher.evaluate_tree``:
-        pure-postings subtrees run through the sharded kernel
-        unchanged (one kernel pass per maximal postings subtree); a
-        doc-values leaf becomes a live-doc_map filter with constant
-        score 0.0 (the same contract as the conjunct path); boolean
-        nodes combine child frames with one union + groupBy per node
-        — MUST = matched-children count equal to the MUST count,
-        SHOULD = matched count >= mm (>=1 without MUSTs), MUST_NOT =
-        anti-join — summing scores exactly as the matcher does and
-        applying the node boost. Scale: every combine is one hash
-        shuffle on (shard, doc_id); nothing collects to the driver.
-
-        Documented deviation: the float32 score rounding the kernel
-        applies at ITS root applies per postings subtree here, so
-        mixed-tree scores can differ from a hypothetical single-pass
-        evaluation in the last float32 ulp.
-        """
-
-        def dv_leaf(node) -> bool:
-            return isinstance(node, (RRangeT, _RNumericSetT, _RGeoT))
-
-        def kernel_frame(node) -> DataFrame:
-            sub = node if isinstance(node, RBool) else RBool(((_MUST, node),))
-            sreq = SearchRequest(
-                qs=_TREE_SENTINEL, qf=req.qf, default_op=req.default_op,
-                mm=0, amount=req.amount, similarities=req.similarities,
-            )
-            self._resolve_cache[
-                ("qs", _TREE_SENTINEL, sreq.qf, sreq.default_op, 0)
-            ] = sub
-            return self.match_ids(sreq)
-
-        def empty_frame() -> DataFrame:
-            spark = self.tables.doc_map.sparkSession
-            return spark.createDataFrame([], MATCH_SCHEMA)
-
-        def eval_node(node) -> DataFrame:
-            if dv_leaf(node):
-                pred = self._range_predicate([(_MUST, node)])
-                return (
-                    self._live_doc_map()
-                    .filter(pred)
-                    .select("shard", "doc_id")
-                    .withColumn("score", F.lit(0.0))
-                )
-            try:
-                # maximal subtree the conjunct path can run (pure
-                # postings, postings + top-conjunct dv, or pure dv —
-                # match_ids serves all three) → kernel
-                rs = tree_ranges(node)
-                if not rs and not tree_has_positive_leaf(node):
-                    # pure-negative postings subtree, NESTED: Lucene
-                    # matches nothing (a pure-dv subtree has no RLeaf
-                    # but is positive — rs non-empty covers it)
-                    return empty_frame()
-                if rs and all(o == _MUST_NOT for o, _ in rs) and not tree_has_positive_leaf(node):
-                    return empty_frame()  # only prohibited dv conjuncts
-                return kernel_frame(node)
-            except ParseError:
-                pass
-            assert isinstance(node, RBool)
-            musts, shoulds, nots = [], [], []
-            for occur, child in node.children:
-                if occur == _MUST:
-                    musts.append(eval_node(child))
-                elif occur == _MUST_NOT:
-                    nots.append(eval_node(child))
-                else:
-                    shoulds.append(eval_node(child))
-            # one union + one aggregation per occur class — a chain of
-            # joins would shuffle once per child instead
-            def tag_union(frames, col):
-                out = None
-                for i, f in enumerate(frames):
-                    t = f.select("shard", "doc_id", "score").withColumn(col, F.lit(i))
-                    out = t if out is None else out.unionByName(t)
-                return out
-
-            base = None
-            if musts:
-                mu = tag_union(musts, "_c").groupBy("shard", "doc_id").agg(
-                    F.sum("score").alias("_mscore"),
-                    F.count_distinct(F.col("_c")).alias("_mcnt"),
-                )
-                base = mu.filter(F.col("_mcnt") == len(musts))
-            if shoulds:
-                sh = tag_union(shoulds, "_c").groupBy("shard", "doc_id").agg(
-                    F.sum("score").alias("_sscore"),
-                    F.count_distinct(F.col("_c")).alias("_smatched"),
-                )
-                if base is not None:
-                    base = base.join(sh, ["shard", "doc_id"], "left")
-                    score = F.col("_mscore") + F.coalesce(F.col("_sscore"), F.lit(0.0))
-                    if node.mm > 0:
-                        base = base.filter(
-                            F.coalesce(F.col("_smatched"), F.lit(0)) >= node.mm
-                        )
-                else:
-                    need = node.mm if node.mm > 0 else 1
-                    base = sh.filter(F.col("_smatched") >= need)
-                    score = F.col("_sscore")
-            elif base is not None:
-                score = F.col("_mscore")
-            else:
-                return empty_frame()  # only prohibited children, nested
-            for nf in nots:
-                base = base.join(
-                    nf.select("shard", "doc_id"), ["shard", "doc_id"], "left_anti"
-                )
-            if node.boost != 1.0:
-                score = score * F.lit(node.boost)
-            return base.select("shard", "doc_id", score.alias("score"))
-
-        return eval_node(tree)
-
-    def _search_tree_mixed(self, tree, req: SearchRequest, amount: int, start: int) -> dict:
-        """Page a mixed-position doc-values tree: rank by (score desc,
-        shard, doc_id) like every other entry point."""
-        j = (
-            self._match_tree_mixed(tree, req)
-            .join(
-                self.tables.doc_map.select("shard", "doc_id", "uniqueId"),
-                ["shard", "doc_id"],
-            )
-            .persist()  # narrow 4-column frame; two actions below
-        )
-        try:
-            rows = (
-                j.orderBy(F.desc("score"), F.asc("shard"), F.asc("doc_id"))
-                .limit(start + amount)
-                .collect()
-            )
-            total = j.count()
-        finally:
-            j.unpersist()
-        return {
-            "totalHits": int(total),
-            "topk": [
-                {
-                    "shard": int(r["shard"]), "doc_id": int(r["doc_id"]),
-                    "score": float(r["score"]), "uniqueId": r["uniqueId"],
-                }
-                for r in rows[start : start + amount]
-            ],
-            "hitsExact": True,
-        }
+        _, tree = self._resolve_request(req)
+        if tree is None:
+            tree = self._clauses_to_tree(req)
+        must = (_MUST, RLeaf((DocValuesSpec(predicate),), conj=False, boost=1.0))
+        if tree_has_positive_leaf(tree):
+            tree = RBool(((_MUST, tree), must))
+        else:
+            # pure negation: its match-all fix-up applies at the root
+            tree = RBool((*tree.children, must), tree.mm, tree.boost)
+        req = dataclasses.replace(req, amount=amount)
+        return self._search_resolved({"q": (req, [], tree)})["q"]
 
     def search_numeric_set(
         self,
@@ -4130,8 +3892,8 @@ class SearchEngine:
 
     def _live_doc_map(self):
         """doc_map minus tombstoned docs — the Lucene liveDocs mask
-        for paths that bypass the postings kernels (pure doc-values
-        ranges, raw KNN): they must not resurface deletes the way
+        for paths that bypass the postings kernels (raw KNN, fetch,
+        export): they must not resurface deletes the way
         IndexReader.numDocs/liveDocs never would. Zero cost when
         nothing is deleted; otherwise a broadcast anti-join of the
         (shard, doc_id) tombstone set (already driver-resident, like

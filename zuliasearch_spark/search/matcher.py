@@ -140,17 +140,16 @@ def combine_clauses(
     return match, total
 
 
-def evaluate_tree(root, term_vectors, n: int, parity: bool, root_fixup: bool = True):
+def evaluate_tree(root, term_vectors, n: int, parity: bool):
     """Evaluate a resolved query-string AST (parser.RBool / RLeaf)
     over a dense doc space — the nested-BooleanQuery generalization
     of :func:`combine_clauses` for parsed queries (groups can nest,
     carry their own mm — Lucene setMinimumNumberShouldMatch — and
     mix +/- with bare terms).
 
-    ``root_fixup``: a top-level query of only prohibited clauses
-    matches everything else (the reference's MatchAll fix-up,
-    ZuliaIndex.java:715-717); NESTED pure-negative groups match
-    nothing, as in Lucene.
+    A top-level query of only prohibited clauses matches everything
+    else (the reference's MatchAll fix-up, ZuliaIndex.java:715-717);
+    NESTED pure-negative groups match nothing, as in Lucene.
     """
     from zuliasearch_spark.search.parser import MUST, MUST_NOT, RBool, RLeaf
 
@@ -200,7 +199,7 @@ def evaluate_tree(root, term_vectors, n: int, parity: bool, root_fixup: bool = T
         elif not has_must:
             # only prohibited children: nothing matches (Lucene),
             # unless this is the root and the fix-up applies
-            if not (top and root_fixup):
+            if not top:
                 mask = np.zeros(n, dtype=bool)
         if node.boost != 1.0:
             score = score * node.boost

@@ -171,6 +171,20 @@ class ExistsSpec:
     subgroup: int = 0
 
 
+@dataclass(frozen=True)
+class DocValuesSpec:
+    """A doc-values leaf — a range, ``zl:ns`` numeric set, geo shape
+    or caller predicate — compiled to the SQL over doc_map columns
+    that selects its docs (the executor compiles RRange / RNumericSet
+    / RGeo nodes into these). The kernel reads it as a per-shard mask
+    of the flagged docs and scores it 0.0 like ``field:*``; the SQL
+    text is the leaf's identity, so a predicate shared by many
+    requests is evaluated once per kernel call."""
+
+    sql: str
+    subgroup: int = 0
+
+
 class ParseError(ValueError):
     pass
 
@@ -774,8 +788,9 @@ class RBool:
 class RRange:
     """Doc-values range (field:[a TO b], IndexOrDocValuesQuery path,
     SetQueryHelper.java:45-106): evaluated against doc_map columns by
-    a Catalyst-pushed predicate, not in the postings kernel. Only
-    valid as a top-level conjunct (MUST / MUST_NOT). ``fields`` is
+    a Catalyst-pushed predicate whose per-doc flags the postings
+    kernel reads as a leaf mask (:class:`DocValuesSpec`), so it may
+    sit anywhere in the boolean tree. ``fields`` is
     the expanded field-mapping target list (FieldTypeUtil
     .expandFields applies to query-side range fields too) — >1 field
     ORs the per-field predicates."""
@@ -798,7 +813,7 @@ class RRange:
 class RNumericSet:
     """zl:ns(...) — ZuliaNumericSetQueryNode (SetQueryHelper
     .getNumericSetQuery:24-89): ``field ∈ {values}`` over numeric doc
-    values, evaluated as a Catalyst predicate like RRange. MUST_NOT
+    values, evaluated as a doc-values leaf like RRange. MUST_NOT
     follows Lucene semantics (docs without the field are kept)."""
 
     fields: tuple[str, ...]
@@ -1176,40 +1191,9 @@ def tree_stat_keys(node) -> set[tuple[str, str]]:
                 out.update(s.stat_keys)
             elif isinstance(s, ExistsSpec):
                 out.add((s.field, None))
-            else:
+            elif not isinstance(s, DocValuesSpec):
                 out.add((s.field, s.term))
     return out
-
-
-def tree_ranges(node, top=True):
-    """Collect RRange / RNumericSet leaves; raise if any sits below
-    the top level (the doc-values join can only apply conjunctively)."""
-    out = []
-    if isinstance(node, RBool):
-        for occur, c in node.children:
-            if isinstance(c, (RRange, RNumericSet, RGeo)):
-                if not top:
-                    raise ParseError("ranges are only supported as top-level conjuncts")
-                if occur == SHOULD and len(node.children) > 1:
-                    raise ParseError("ranges are only supported as top-level conjuncts (MUST/MUST_NOT)")
-                out.append((occur, c))
-            else:
-                out.extend(tree_ranges(c, top=False))
-    return out
-
-
-def strip_ranges(node):
-    """Copy of the tree without its top-level RRange / RNumericSet
-    children (they become a doc-values predicate); None if nothing
-    remains."""
-    if not isinstance(node, RBool):
-        return node
-    kept = tuple(
-        (o, c) for o, c in node.children if not isinstance(c, (RRange, RNumericSet, RGeo))
-    )
-    if not kept:
-        return None
-    return RBool(kept, node.mm, node.boost)
 
 
 def tree_has_positive_leaf(node) -> bool:
