@@ -2416,11 +2416,28 @@ SELECT vec_id, round(c, 4) AS cosine FROM c
 ORDER BY c DESC, vec_id ASC LIMIT 10
 """
 
-# derived band layout (max_hamming + 1 bands over 64 bits) — kept in
-# lockstep with pipeline.simhash_band_layout via the VALUES list
+def _simhash_band_layout(max_hamming: int, bits: int = P.SIMHASH_BITS):
+    """[(offset, width)] for ``max_hamming + 1`` single bands: by
+    pigeonhole two fingerprints within the distance budget share at
+    least one exact band. The oracle's complete reference blocking;
+    ``pipeline.simhash_pairs`` uses Manku multi-table blocking
+    (``simhash_block_combos``) and must find the same pairs."""
+    n_bands = max_hamming + 1
+    if n_bands > bits:
+        raise ValueError(f"max_hamming {max_hamming} needs more bands than {bits} bits")
+    base, rem = divmod(bits, n_bands)
+    out, off = [], 0
+    for i in range(n_bands):
+        w = base + (1 if i < rem else 0)
+        out.append((off, w))
+        off += w
+    return out
+
+
+# max_hamming + 1 bands over 64 bits, as a VALUES list
 _SIMHASH_BAND_VALUES = ", ".join(
     f"({b}, {off}, {(1 << w) - 1})"
-    for b, (off, w) in enumerate(P.simhash_band_layout(6))
+    for b, (off, w) in enumerate(_simhash_band_layout(6))
 )
 
 _SIMHASH_PAIRS_SQL = f"""

@@ -101,23 +101,6 @@ def lsh_tuning(
         )
     return best, n_perms // best
 SIMHASH_BITS = 64  # 32 bits collides heavily at 1e9+ docs
-
-
-def simhash_band_layout(max_hamming: int, bits: int = SIMHASH_BITS):
-    """[(offset, width)] for ``max_hamming + 1`` bands — pigeonhole
-    then GUARANTEES two fingerprints within the distance budget share
-    at least one exact band (the r2 contract bug: 4 fixed 8-bit bands
-    only covered Hamming ≤ 3 while the default filter promised 6)."""
-    n_bands = max_hamming + 1
-    if n_bands > bits:
-        raise ValueError(f"max_hamming {max_hamming} needs more bands than {bits} bits")
-    base, rem = divmod(bits, n_bands)
-    out, off = [], 0
-    for i in range(n_bands):
-        w = base + (1 if i < rem else 0)
-        out.append((off, w))
-        off += w
-    return out
 WINNOW_K = 5  # tokens per k-gram
 WINNOW_W = 4  # k-grams per window
 
