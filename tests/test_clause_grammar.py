@@ -6,8 +6,10 @@ BooleanQuery (getQuery:700-774). Round-4's mini-grammar guard raised
 on bool operators in clause text; round 5 routes grammar-bearing
 clause text through search.parser instead (executor._clauses_to_tree)
 so ``QueryClause(q="a OR b")`` behaves exactly like ``qs="a OR b"``.
-Plain token clauses keep the batch DAAT kernel — their grammar
-equivalence is asserted here too.
+Plain token clauses resolve without a parse but compose into the same
+one boolean tree — their grammar equivalence is asserted here too, and
+so is the boost folding that keeps a boosted clause's scores equal to
+the exhaustive oracle's, bit for bit.
 """
 
 import pandas as pd
@@ -26,28 +28,32 @@ from zuliasearch_spark.search.query import (
 C = QueryClause
 
 
-@pytest.fixture(scope="module")
-def engine(spark):
-    cfg = IndexConfig(
-        index_name="clauseg",
-        unique_id_col="uniqueId",
-        number_of_shards=2,
-        default_search_fields=("text",),
-        field_configs=(
-            FieldConfig("text", index_as=(IndexAs("text", "whitespace_lc"),)),
-        ),
-    )
-    rows = [
+CFG = IndexConfig(
+    index_name="clauseg",
+    unique_id_col="uniqueId",
+    number_of_shards=2,
+    default_search_fields=("text",),
+    field_configs=(
+        FieldConfig("text", index_as=(IndexAs("text", "whitespace_lc"),)),
+    ),
+)
+CORPUS = pd.DataFrame(
+    [
         ("1", "alpha beta", 2010),
         ("2", "gamma delta", 2020),
         ("3", "alpha gamma", 2000),
         ("4", "beta delta epsilon", 2021),
         ("5", "alpha epsilon", 2018),
         ("6", "zeta", 1999),
-    ]
-    pdf = pd.DataFrame(rows, columns=["uniqueId", "text", "year"])
+    ],
+    columns=["uniqueId", "text", "year"],
+)
+
+
+@pytest.fixture(scope="module")
+def engine(spark):
     tables = build_index(
-        spark.createDataFrame(pdf), cfg, stored_cols=("year",)
+        spark.createDataFrame(CORPUS), CFG, stored_cols=("year",)
     ).persist()
     yield SearchEngine(tables)
     tables.unpersist()
@@ -140,6 +146,25 @@ def test_clause_boost_applies_to_grammar_subtree(engine):
     s1 = {t["uniqueId"]: t["score"] for t in one["topk"]}
     for t in two["topk"]:
         assert t["score"] == pytest.approx(2.0 * s1[t["uniqueId"]], rel=1e-6)
+
+
+def test_group_boost_folds_into_term_weights(engine):
+    """A boost on a group is pushed into its terms' weights, as
+    Lucene's createWeight(boost) does, not multiplied onto the summed
+    score: ``(x y)^1.3``, the clause ``x y`` at boost 1.3 and the
+    oracle's flat clause evaluation agree to the last bit."""
+    from zuliasearch_spark.oracle.bm25_oracle import OracleIndex
+
+    clause = SearchRequest((C("SCORE_SHOULD", q="beta delta", boost=1.3),), amount=10)
+    qs = SearchRequest(qs="(beta delta)^1.3", amount=10)
+
+    def exact(out):
+        return out["totalHits"], [(t["uniqueId"], t["score"]) for t in out["topk"]]
+
+    want = exact(OracleIndex(CORPUS, CFG).search(clause))
+    assert want[0] == 3
+    assert exact(engine.search(clause)) == want
+    assert exact(engine.search(qs)) == want
 
 
 def test_mixed_plain_and_grammar_clauses(engine):

@@ -4,7 +4,10 @@ Query lifecycle, mirroring the reference's
 (ZuliaIndex.internalQuery → ShardReader.queryShard → QueryCombiner;
 SURVEY.md §3.1) re-expressed for Spark:
 
-1. PLAN (driver): resolve clauses → (field, term) leaves; fetch the
+1. PLAN (driver): resolve the request — clause model or query
+   string — into ONE boolean tree (``_resolve_request``; the
+   reference composes every clause into one BooleanQuery,
+   ZuliaIndex.getQuery:700-774) with (field, term) leaves; fetch the
    leaves' df/ttf from the term_stats table (a pushdown-pruned scan
    of only the query terms) and field stats (tiny, cached); compute
    per-(term, shard) idf and per-(field, shard) avgdl exactly like
@@ -16,8 +19,8 @@ SURVEY.md §3.1) re-expressed for Spark:
    the query terms' blocks are read — then groupBy(shard)
    .applyInPandas(kernel): a per-shard document-at-a-time scoring
    kernel (decode delta-gap varint blocks, dense score accumulation,
-   Lucene float32 BM25, boolean clause algebra shared with the
-   oracle), with a **block-max pruning** path (below). When a request
+   Lucene float32 BM25, the tree evaluated by matcher.evaluate_tree),
+   with a **block-max pruning** path (below). When a request
    has doc-values leaves, the scan is instead cogrouped by shard with
    one narrow doc_map frame — the rows passing any leaf's predicate
    (pushed into the parquet scan), projected to (shard, doc_id, one
@@ -42,28 +45,35 @@ queries/sec, not per-query latency.
 Spark re-expression of Lucene's WAND/MAXSCORE skipping that the
 reference gets implicitly from TopScoreDocCollector's TOP_SCORES mode
 (ShardReader.java:307; per-block impacts in the codec). Per posting
-block we stored (max_tf, min_dl); the kernel:
+block we stored (max_tf, min_dl). A request's tree qualifies when
+every leaf is a term and every boost on a MUST/SHOULD path is > 0
+(``_prune_leaves``); then the kernel:
 
   1. computes each block's score upper bound
      ub = weight · impact(max_tf, min_dl)  (bm25_max_impact — the
      impact function is monotone ↑tf, ↓dl, so this bounds every
-     posting in the block);
+     posting in the block); a leaf's weight is the product of the
+     boosts on its path, and MUST_NOT subtrees add nothing;
   2. scatters block ubs into a dense per-doc upper-bound array UB via
      a difference array over [first_doc, last_doc] ranges (docIDs are
      dense per shard);
   3. exact-scores a SEED of the top-|4k| docs by UB → threshold θ =
      k-th best exact score of *matching* seed docs;
   4. final candidates C = {d : UB(d) ≥ θ}; decodes ONLY blocks whose
-     doc range intersects C and exact-scores C.
+     doc range intersects C and exact-scores C (``evaluate_tree``
+     over the candidate subset).
 
 Safety: UB(d) ≥ score(d) for every matching d and θ ≤ true k-th
 score, so the true top-k ⊆ C — returned docIDs and scores are
 identical to the dense path (asserted in tests/test_pruning_batch.py).
 Like Lucene's TOP_SCORES, totalHits becomes a lower bound when
 pruning actually skipped anything (`hits_exact=False` in the
-response). If fewer than k matching candidates exist (e.g. zero-score
-filter matches), the kernel falls back to dense — correctness never
-depends on query shape.
+response). Every matching doc matches some positive-weight term leaf,
+so it lies in the UB universe. A tree whose docs could match with
+score 0 (a FILTER or TERMS clause, which carries boost 0; a ``^0``
+group) or that has a non-term leaf (phrase, doc-values) takes the
+dense path, as does a seed with fewer than k matches — correctness
+never depends on query shape.
 
 The gather moves only O(shards × k) rows to the driver; all heavy
 data stays columnar in executors.
@@ -87,7 +97,7 @@ from zuliasearch_spark.indexing.builder import IndexTables
 from zuliasearch_spark.indexing.tombstones import load_tombstone_uids, save_tombstone_uids
 from zuliasearch_spark.search.intervals import doc_candidates as interval_doc_candidates
 from zuliasearch_spark.search.intervals import eval_tree as eval_interval_tree
-from zuliasearch_spark.search.matcher import combine_clauses, evaluate_tree
+from zuliasearch_spark.search.matcher import evaluate_tree
 from zuliasearch_spark.search.parser import DocValuesSpec
 from zuliasearch_spark.search.parser import ExistsSpec as _ExistsSpecT
 from zuliasearch_spark.search.parser import RGeo as _RGeoT
@@ -105,6 +115,25 @@ from zuliasearch_spark.search.parser import (
     tree_has_positive_leaf,
     tree_stat_keys,
 )
+from zuliasearch_spark.search.query import (
+    DrillDown,
+    IntervalSpec,
+    PhraseSpec,
+    ResolvedClause,
+    SearchRequest,
+    TermSetSpec,
+    TermSpec,
+    clause_q_is_plain,
+    resolve_clause,
+)
+from zuliasearch_spark.search.scorer import (
+    Bm25Params,
+    bm25_avgdl,
+    bm25_max_impact,
+    bm25_term_scores,
+    bm25_weight,
+)
+from zuliasearch_spark.util.varint import segmented_cumsum, varint_decode
 
 
 def _require_nonzero_query_vector(vector) -> None:
@@ -119,15 +148,26 @@ def _require_nonzero_query_vector(vector) -> None:
         )
 
 
-def _resolved_clause_to_tree(rc: "ResolvedClause") -> "RBool":
-    """ResolvedClause (plain-token clause model) → equivalent RBool
-    subtree, so a mixed request (some clauses needing the full
-    grammar) evaluates every clause on ONE tree. Mirrors
-    matcher.combine_clauses' group algebra exactly: each token GROUP
+KERNEL_SCHEMA = (
+    "qid string, shard int, doc_id long, score double, total_hits long, "
+    "next_score double, has_next boolean, hits_exact boolean, "
+    "blocks_decoded long, blocks_total long"
+)
+
+MATCH_SCHEMA = "shard int, doc_id long, score double"
+
+
+def _resolved_clause_to_tree(rc: ResolvedClause) -> RBool | RLeaf:
+    """ResolvedClause (plain-token clause model) → equivalent subtree
+    with the group algebra of matcher.combine_clauses: each token GROUP
     becomes one RLeaf child (OR across its per-field subgroups;
     multi-term tokens conj under default-AND via RLeaf.conj), a
     required group is a MUST child, optional groups are SHOULD with
-    the clause's min_optional as the node's mm."""
+    the clause's min_optional as the node's mm. A clause whose text
+    analyzes to no terms is an empty leaf: it matches nothing, yet
+    still counts as a positive clause (no match-all fix-up)."""
+    if not rc.specs:
+        return RLeaf((), conj=False, boost=1.0)
     by_group: dict[int, list] = {}
     req_by_group: dict[int, bool] = {}
     for s in rc.specs:
@@ -139,34 +179,6 @@ def _resolved_clause_to_tree(rc: "ResolvedClause") -> "RBool":
         leaf = RLeaf(specs, conj=bool(req_by_group[g]), boost=1.0)
         children.append((_MUST if req_by_group[g] else _SHOULD, leaf))
     return RBool(tuple(children), mm=rc.min_optional, boost=1.0)
-from zuliasearch_spark.search.query import (
-    DrillDown,
-    IntervalSpec,
-    PhraseSpec,
-    ResolvedClause,
-    SearchRequest,
-    TermSetSpec,
-    TermSpec,
-    clause_q_is_plain,
-    iter_stat_keys,
-    resolve_clause,
-)
-from zuliasearch_spark.search.scorer import (
-    Bm25Params,
-    bm25_avgdl,
-    bm25_max_impact,
-    bm25_term_scores,
-    bm25_weight,
-)
-from zuliasearch_spark.util.varint import segmented_cumsum, varint_decode
-
-KERNEL_SCHEMA = (
-    "qid string, shard int, doc_id long, score double, total_hits long, "
-    "next_score double, has_next boolean, hits_exact boolean, "
-    "blocks_decoded long, blocks_total long"
-)
-
-MATCH_SCHEMA = "shard int, doc_id long, score double"
 
 
 def _knn_pdf(shard: int, rows) -> pd.DataFrame:
@@ -324,12 +336,11 @@ class _QueryPlan:
     """Everything the kernel needs for one request (pickled once)."""
 
     qid: str
-    resolved: tuple[ResolvedClause, ...]
+    tree: RBool  # the request's resolved boolean tree
     per_shard_amount: int
     after_by_shard: dict[int, tuple[float, int]]
     prune: bool
     sims: tuple[tuple[str, str], ...] = ()  # per-field similarity override
-    tree: "RBool | None" = None  # parsed query-string AST (overrides resolved)
 
 
 _VALID_SIMS = ("BM25", "TFIDF", "TF", "CONSTANT")
@@ -659,63 +670,15 @@ def _phrase_weight(pspec: PhraseSpec, shard, idf_by_key, params):
     return (sb, sc)
 
 
-def _subset_term_vectors(store, n_sub, shard, idf_by_key, avgdl_by_key, params, cand_sorted, sims=None):
+def _subset_term_vectors(store, n_sub, shard, idf_by_key, avgdl_by_key, params, cand_sorted):
     """term_vectors over a candidate subset: arrays indexed by candidate
-    position, postings gathered via searchsorted on decoded doc lists."""
-    sims = sims or {}
+    position, postings gathered via searchsorted on the decoded doc
+    lists of the blocks overlapping the candidates. Only BM25
+    ``TermSpec`` leaves reach it (:func:`_prune_leaves`)."""
 
-    def term_vectors(spec, boost: float) -> tuple[np.ndarray, np.ndarray]:
+    def term_vectors(spec: TermSpec, boost: float) -> tuple[np.ndarray, np.ndarray]:
         mask = np.zeros(n_sub, dtype=bool)
         score = np.zeros(n_sub, dtype=np.float64)
-        if isinstance(spec, _ExistsSpecT):
-            entry = store.decode((spec.field, None))
-            if entry is None:
-                return mask, score
-            docs = entry[0]
-            pos = np.searchsorted(docs, cand_sorted)
-            ok = (pos < docs.size) & (docs[np.minimum(pos, max(docs.size - 1, 0))] == cand_sorted)
-            mask[ok] = True
-            score[ok] = np.float32(boost) if params.lucene_parity else boost
-            return mask, score
-        if isinstance(spec, IntervalSpec):
-            got = _interval_postings(store, spec)
-            if got is None:
-                return mask, score
-            docs = got[0]
-            pos = np.searchsorted(docs, cand_sorted)
-            ok = (pos < docs.size) & (docs[np.minimum(pos, max(docs.size - 1, 0))] == cand_sorted)
-            mask[ok] = True
-            score[ok] = np.float32(boost) if params.lucene_parity else boost
-            return mask, score
-        if isinstance(spec, TermSetSpec):
-            for t in spec.terms:
-                entry = store.decode((spec.field, t))
-                if entry is None:
-                    continue
-                docs = entry[0]
-                pos = np.searchsorted(docs, cand_sorted)
-                ok = (pos < docs.size) & (
-                    docs[np.minimum(pos, max(docs.size - 1, 0))] == cand_sorted
-                )
-                mask[ok] = True
-            score[mask] = np.float32(boost) if params.lucene_parity else boost
-            return mask, score
-        if isinstance(spec, PhraseSpec):
-            got = _phrase_postings(store, spec)
-            if got is None:
-                return mask, score
-            udocs, freqs, dls = got
-            pos = np.searchsorted(udocs, cand_sorted)
-            ok = (pos < udocs.size) & (udocs[np.minimum(pos, max(udocs.size - 1, 0))] == cand_sorted)
-            mask[ok] = True
-            w = _phrase_weight(spec, shard, idf_by_key, params)
-            if w is not None and ok.any():
-                sel = pos[ok]
-                score[ok] = _leaf_scores(
-                    sims.get(spec.field, "BM25"), freqs[sel], dls[sel], boost, w,
-                    avgdl_by_key[(spec.field, shard)], params,
-                )
-            return mask, score
         entry = store.decode_overlapping((spec.field, spec.term), cand_sorted)
         if entry is None:
             return mask, score
@@ -729,7 +692,7 @@ def _subset_term_vectors(store, n_sub, shard, idf_by_key, avgdl_by_key, params, 
         if idf is not None and ok.any():
             avgdl = avgdl_by_key[(spec.field, shard)]
             sel = pos[ok]
-            score[ok] = _leaf_scores(sims.get(spec.field, "BM25"), tfs[sel], dls[sel], boost, idf, avgdl, params)
+            score[ok] = _leaf_scores("BM25", tfs[sel], dls[sel], boost, idf, avgdl, params)
         return mask, score
 
     return term_vectors
@@ -800,12 +763,8 @@ def _dense_term_vectors(store, n, shard, idf_by_key, avgdl_by_key, params, sims=
     return term_vectors
 
 
-def _leaf_specs(tree, resolved):
-    """Every leaf spec of a request: its tree's, else its clauses'."""
-    if tree is None:
-        for rc in resolved:
-            yield from rc.specs
-        return
+def _leaf_specs(tree):
+    """Every leaf spec of a request's tree."""
     stack = [tree]
     while stack:
         node = stack.pop()
@@ -815,14 +774,9 @@ def _leaf_specs(tree, resolved):
             yield from node.specs
 
 
-def _stat_keys(tree, resolved) -> set:
-    """(field, term) keys whose stats and postings a request reads."""
-    return tree_stat_keys(tree) if tree is not None else iter_stat_keys(resolved)
-
-
-def _has_phrase(tree, resolved) -> bool:
+def _has_phrase(tree) -> bool:
     """Does the request need the positions stream?"""
-    return any(isinstance(s, (PhraseSpec, IntervalSpec)) for s in _leaf_specs(tree, resolved))
+    return any(isinstance(s, (PhraseSpec, IntervalSpec)) for s in _leaf_specs(tree))
 
 
 def _dv_masks(dv_pdf, dv_sqls, n: int) -> dict[str, np.ndarray]:
@@ -1000,31 +954,49 @@ def _rank_and_page(idx: np.ndarray, scores: np.ndarray, after, per_shard_amount:
     return top, tscores, has_next, next_score
 
 
-def _scoring_leaves(resolved) -> list[tuple[TermSpec, float]]:
-    out = []
-    for rc in resolved:
-        if rc.clause.scoring:
-            for spec in rc.specs:
-                out.append((spec, rc.clause.boost * getattr(spec, "boost", 1.0)))
-    return out
+def _prune_leaves(tree) -> list[tuple[TermSpec, float]] | None:
+    """(leaf, weight) of every MUST/SHOULD leaf, the weight being the
+    product of the boosts on its path (what evaluate_tree passes to
+    the leaf), or None when the tree allows no block-max bound: a leaf
+    that is not a term (phrase freq, constant-score and doc-values
+    leaves have no per-block impact), a zero boost on a MUST/SHOULD
+    path (its docs match with score 0, outside the UB universe), or
+    no positive leaf at all (pure negation). MUST_NOT subtrees add
+    nothing to the bound."""
+    out: list[tuple[TermSpec, float]] = []
+    stack = [(tree, 1.0, False)]
+    while stack:
+        node, boost, negated = stack.pop()
+        boost = boost * node.boost
+        if isinstance(node, RBool):
+            stack.extend((c, boost, negated or o == _MUST_NOT) for o, c in node.children)
+            continue
+        for spec in node.specs:
+            if not isinstance(spec, TermSpec):
+                return None
+            if not negated:
+                w = boost * spec.boost
+                if not w > 0:
+                    return None
+                out.append((spec, w))
+    return out or None
 
 
-def _apply_tombstones(match: np.ndarray, deleted) -> None:
+def _apply_tombstones(match: np.ndarray, deleted) -> np.ndarray:
+    """``match`` without the tombstoned docs (a copy: the evaluator's
+    mask may be a doc-values leaf's, shared across the batch)."""
     if deleted is not None and deleted.size:
-        d = deleted[deleted < match.size]
-        match[d] = False
+        match = match.copy()
+        match[deleted[deleted < match.size]] = False
+    return match
 
 
 def _dense_match(plan: _QueryPlan, store, shard, n, idf_by_key, avgdl_by_key, params, deleted, dv):
     """(match mask, scores) of one request over one shard's dense doc
     space, tombstoned docs unmatched."""
     tv = _dense_term_vectors(store, n, shard, idf_by_key, avgdl_by_key, params, dict(plan.sims), dv)
-    if plan.tree is not None:
-        match, total = evaluate_tree(plan.tree, tv, n, params.lucene_parity)
-    else:
-        match, total = combine_clauses(list(plan.resolved), tv, n, params.lucene_parity)
-    _apply_tombstones(match, deleted)
-    return match, total
+    match, total = evaluate_tree(plan.tree, tv, n, params.lucene_parity)
+    return _apply_tombstones(match, deleted), total
 
 
 def _run_query_on_shard(
@@ -1043,14 +1015,13 @@ def _run_query_on_shard(
     Returns (top_docs, top_scores, total_hits, has_next, next_score,
     hits_exact).
     """
-    resolved = list(plan.resolved)
     after = plan.after_by_shard.get(shard)
     k = plan.per_shard_amount
 
-    if plan.tree is None and plan.prune and not plan.sims and deleted is None:
-        # (pruning bounds assume BM25 impacts; similarity overrides,
-        # tombstones and parsed trees fall back to dense)
-        result = _pruned_search(resolved, store, shard, n, idf_by_key, avgdl_by_key, params, after, k)
+    if plan.prune and not plan.sims and deleted is None:
+        # (pruning bounds assume BM25 impacts; similarity overrides
+        # and tombstones fall back to dense)
+        result = _pruned_search(plan.tree, store, shard, n, idf_by_key, avgdl_by_key, params, after, k)
         if result is not None:
             return result
 
@@ -1062,16 +1033,12 @@ def _run_query_on_shard(
     return top, tscores, total_hits, has_next, next_score, True
 
 
-def _pruned_search(resolved, store, shard, n, idf_by_key, avgdl_by_key, params, after, k):
+def _pruned_search(tree, store, shard, n, idf_by_key, avgdl_by_key, params, after, k):
     """Block-max pruning (docstring at module top). Returns None to
     signal dense fallback."""
-    leaves = _scoring_leaves(resolved)
-    if not leaves or _may_have_zero_score_matches(resolved):
-        # docs can match with zero score (pure filter / negation
-        # shapes): the UB universe would miss them — dense only
+    leaves = _prune_leaves(tree)
+    if leaves is None:
         return None
-    if any(isinstance(s, PhraseSpec) for rc in resolved for s in rc.specs):
-        return None  # phrase freq has no per-block bound: dense only
 
     # 1-2. dense per-doc upper bound via difference array over block ranges
     ub_diff = np.zeros(n + 1, dtype=np.float64)
@@ -1086,8 +1053,6 @@ def _pruned_search(resolved, store, shard, n, idf_by_key, avgdl_by_key, params, 
         avgdl = avgdl_by_key[(spec.field, shard)]
         bm25_idf_v = idf[0]
         w = float(np.float32(boost) * np.float32(bm25_idf_v)) if params.lucene_parity else boost * bm25_idf_v
-        if w <= 0:
-            continue
         rows = np.arange(span[0], span[1], dtype=np.int64)
         # vectorized block impact: ub = w * f(max_tf, min_dl)
         impacts = bm25_term_scores(store.max_tf[rows], store.min_dl[rows], w, avgdl, params)
@@ -1103,7 +1068,7 @@ def _pruned_search(resolved, store, shard, n, idf_by_key, avgdl_by_key, params, 
 
     def exact(cands: np.ndarray):
         tv = _subset_term_vectors(store, cands.size, shard, idf_by_key, avgdl_by_key, params, cands)
-        m, t = combine_clauses(resolved, tv, cands.size, params.lucene_parity)
+        m, t = evaluate_tree(tree, tv, cands.size, params.lucene_parity)
         return cands[m], t[m]
 
     seed_size = max(4 * k, 64)
@@ -1142,17 +1107,6 @@ def _pruned_search(resolved, store, shard, n, idf_by_key, avgdl_by_key, params, 
         # mirroring QueryCombiner's use of the shard's last result
         next_score = float(tscores[-1])
     return top, tscores, total_hits, has_next or pruned_any, next_score, not pruned_any
-
-
-def _may_have_zero_score_matches(resolved) -> bool:
-    """True if docs can match with zero score contribution (pure
-    filter/negation shapes), in which case pruning must not be trusted
-    to find all of the top-k."""
-    has_required_nonscoring = any(
-        rc.clause.type in ("FILTER", "TERMS") for rc in resolved
-    )
-    all_negative = all(rc.clause.negative for rc in resolved)
-    return has_required_nonscoring or all_negative
 
 
 def _finish(docs, scores, after, k):
@@ -1249,7 +1203,7 @@ class SearchEngine:
         # immutable snapshots, so entries never invalidate.
         self._df_cache: dict[tuple[str, str, int], int] = {}
         self._known_terms: set[tuple[str, str]] = set()
-        self._resolve_cache: dict[tuple, list[ResolvedClause]] = {}
+        self._resolve_cache: dict[tuple, RBool] = {}
         self._pinned: DataFrame | None = None
         # uniqueId per (shard, doc_id), driver-resident (see _id_column)
         self._ids: dict[int, np.ndarray] | None = None
@@ -1356,41 +1310,29 @@ class SearchEngine:
                 out[f] = sim
         return tuple(sorted(out.items()))
 
-    def _resolve_request(self, req: SearchRequest):
-        """(resolved_clauses, tree): clause model or parsed tree.
-
-        A clause-model request whose clause ``q`` text uses
-        query-string GRAMMAR (bool operators, parens, ranges,
-        phrases, fuzzy/wildcard, boosts — anything past plain
-        ``field:term`` tokens) resolves through the FULL parser into
-        one boolean tree, the reference's behavior for every clause
-        (ZuliaIndex.java:946-964 feeds each clause's q to
-        ZuliaFlexibleQueryParser before combining by occur). Plain
-        token clauses keep the batch-kernel clause path — their
-        semantics are grammar-identical (tests/test_clause_grammar.py
-        asserts the parity), and the DAAT pruning fast path stays."""
+    def _resolve_request(self, req: SearchRequest) -> RBool:
+        """The request's one resolved boolean tree, cached per request
+        text. A query string parses into it; a clause-model request
+        composes its clauses into it (:meth:`_clauses_to_tree`, the
+        reference's getQuery composition, ZuliaIndex.getQuery:700-774),
+        whatever its clause text — plain tokens and query-string
+        grammar alike. Doc-values leaves become kernel leaves
+        (:meth:`_compile_docvalues`)."""
         if req.qs is None:
-            if req.clauses and any(
-                c.q is not None and not clause_q_is_plain(c.q) for c in req.clauses
-            ):
-                key = ("clauses", req.clauses, req.qf, req.default_op, req.mm)
-                tree = self._resolve_cache.get(key)
-                if tree is None:
-                    tree = self._compile_docvalues(self._clauses_to_tree(req))
-                    if len(self._resolve_cache) < 4096:
-                        self._resolve_cache[key] = tree
-                return [], tree
-            return self._resolve(req), None
-        key = ("qs", req.qs, req.qf, req.default_op, req.mm)
+            key = ("clauses", req.clauses, req.qf, req.default_op, req.mm)
+        else:
+            key = ("qs", req.qs, req.qf, req.default_op, req.mm)
         tree = self._resolve_cache.get(key)
         if tree is None:
-            fields = tuple(req.qf) or self.config.default_search_fields
-            tree = self._compile_docvalues(
-                self._resolve_qs_tree(req.qs, fields, req.default_op, req.mm)
-            )
+            if req.qs is None:
+                tree = self._clauses_to_tree(req)
+            else:
+                fields = tuple(req.qf) or self.config.default_search_fields
+                tree = self._resolve_qs_tree(req.qs, fields, req.default_op, req.mm)
+            tree = self._compile_docvalues(tree)
             if len(self._resolve_cache) < 4096:
                 self._resolve_cache[key] = tree
-        return [], tree
+        return tree
 
     def _compile_docvalues(self, node):
         """Copy of a resolved tree whose RRange / RNumericSet / RGeo
@@ -1440,7 +1382,9 @@ class SearchEngine:
         """Clause model → one resolved boolean tree (the reference's
         getQuery composition, ZuliaIndex.getQuery:700-774: each
         clause's q parsed by the full grammar, added to a root
-        BooleanQuery with its occur). Occur map: SCORE_MUST→MUST,
+        BooleanQuery with its occur). Plain-token text and ``terms``
+        sets skip the parse (:func:`resolve_clause`, grammar-identical
+        — :func:`clause_q_is_plain`). Occur map: SCORE_MUST→MUST,
         SCORE_SHOULD→SHOULD, FILTER/TERMS→MUST with scores zeroed
         (Lucene FILTER occur contributes no score — boost 0.0 on the
         subtree root), FILTER_NOT/TERMS_NOT→MUST_NOT."""
@@ -1493,22 +1437,6 @@ class SearchEngine:
                 if t in point_types and f not in indexed
             )
             self._date_fields_cache = got
-        return got
-
-    def _resolve(self, req: SearchRequest) -> list[ResolvedClause]:
-        # requests are frozen/hashable: cache clause resolution — a
-        # repeating query stream (the serving case) pays analysis once
-        got = self._resolve_cache.get(req.clauses)
-        if got is None:
-            got = [
-                resolve_clause(
-                    c, self._analyze, self.config.default_search_fields,
-                    expand=self.config.expand_field,
-                )
-                for c in req.clauses
-            ]
-            if len(self._resolve_cache) < 4096:
-                self._resolve_cache[req.clauses] = got
         return got
 
     def _collect_term_stats(self, specs: set[tuple[str, str]]) -> dict[tuple[str, str, int], int]:
@@ -1854,35 +1782,25 @@ class SearchEngine:
         identical to the exact path; the oversampled first pass just
         moves less data per shard."""
         return self._search_resolved(
-            {qid: (r, *self._resolve_request(r)) for qid, r in reqs.items()}, fetch, oversample
+            {qid: (r, self._resolve_request(r)) for qid, r in reqs.items()}, fetch, oversample
         )
 
     def _search_resolved(self, entries: dict, fetch: str = "ids", oversample: bool = False) -> dict[str, dict]:
         """:meth:`search_many` over requests already resolved:
-        ``entries`` maps qid → (request, resolved clauses, tree)."""
+        ``entries`` maps qid → (request, tree)."""
         shards = self._shards()
         reqs = {qid: e[0] for qid, e in entries.items()}
-        resolved_by_qid = {qid: e[1] for qid, e in entries.items()}
-        tree_by_qid = {qid: e[2] for qid, e in entries.items()}
+        tree_by_qid = {qid: e[1] for qid, e in entries.items()}
         # purely-negative queries take the MatchAll fix-up in the
         # gather (driver-side page from shard_counts) — their kernel
         # rows must never be undersized, so they are exempt from
         # oversampling
-        neg_qids = set()
-        for qid in reqs:
-            if (
-                resolved_by_qid[qid]
-                and all(rc.clause.negative for rc in resolved_by_qid[qid])
-            ) or (
-                tree_by_qid[qid] is not None
-                and not tree_has_positive_leaf(tree_by_qid[qid])
-            ):
-                neg_qids.add(qid)
+        neg_qids = {qid for qid, tree in tree_by_qid.items() if not tree_has_positive_leaf(tree)}
 
         qplans: list[_QueryPlan] = []
         k_by_qid: dict[str, int] = {}
         for qid, req in reqs.items():
-            resolved, tree = resolved_by_qid[qid], tree_by_qid[qid]
+            tree = tree_by_qid[qid]
             after = {
                 s: a
                 for s in shards
@@ -1904,12 +1822,11 @@ class SearchEngine:
             qplans.append(
                 _QueryPlan(
                     qid=qid,
-                    resolved=tuple(resolved),
+                    tree=tree,
                     per_shard_amount=k_shard,
                     after_by_shard=after,
                     prune=bool(req.block_max_pruning),
-                    sims=self._effective_sims(req, {f for f, _ in _stat_keys(tree, resolved)}),
-                    tree=tree,
+                    sims=self._effective_sims(req, {f for f, _ in tree_stat_keys(tree)}),
                 )
             )
 
@@ -2054,10 +1971,8 @@ class SearchEngine:
         keys: set = set()
         dv_sqls: set[str] = set()
         for p in plans:
-            keys |= _stat_keys(p.tree, p.resolved)
-            dv_sqls.update(
-                s.sql for s in _leaf_specs(p.tree, p.resolved) if isinstance(s, DocValuesSpec)
-            )
+            keys |= tree_stat_keys(p.tree)
+            dv_sqls.update(s.sql for s in _leaf_specs(p.tree) if isinstance(s, DocValuesSpec))
         if not keys and not dv_sqls:
             return None
         dv_sqls = tuple(sorted(dv_sqls))
@@ -2066,7 +1981,7 @@ class SearchEngine:
             plans, idf_by_key, avgdl_by_key, self.params, self._shard_counts,
             self._tombstone_arrays(), dv_sqls, full_match,
         )
-        scan = self._postings_scan(cond, any(_has_phrase(p.tree, p.resolved) for p in plans))
+        scan = self._postings_scan(cond, any(_has_phrase(p.tree) for p in plans))
         schema = MATCH_SCHEMA if full_match else KERNEL_SCHEMA
         if not dv_sqls:
             return scan.groupBy("shard").applyInPandas(
@@ -2247,20 +2162,16 @@ class SearchEngine:
         positive clause (a purely-negative match-all set should be
         computed as doc_map anti-join instead).
         """
-        resolved, tree = self._resolve_request(req)
-        if tree is not None:
-            if not tree_has_positive_leaf(tree):
-                raise ValueError("match_ids needs a positive clause")
-        elif resolved and all(rc.clause.negative for rc in resolved):
+        tree = self._resolve_request(req)
+        if not tree_has_positive_leaf(tree):
             raise ValueError("match_ids needs a positive clause; anti-join doc_map for pure negations")
         plan = _QueryPlan(
             qid="q",
-            resolved=tuple(resolved),
+            tree=tree,
             per_shard_amount=0,
             after_by_shard={},
             prune=False,
-            sims=self._effective_sims(req, {f for f, _ in _stat_keys(tree, resolved)}),
-            tree=tree,
+            sims=self._effective_sims(req, {f for f, _ in tree_stat_keys(tree)}),
         )
         frame = self._kernel_frame([plan], full_match=True)
         if frame is None:
@@ -2879,9 +2790,7 @@ class SearchEngine:
         """
         import dataclasses
 
-        _, tree = self._resolve_request(req)
-        if tree is None:
-            tree = self._clauses_to_tree(req)
+        tree = self._resolve_request(req)
         must = (_MUST, RLeaf((DocValuesSpec(predicate),), conj=False, boost=1.0))
         if tree_has_positive_leaf(tree):
             tree = RBool(((_MUST, tree), must))
@@ -2889,7 +2798,7 @@ class SearchEngine:
             # pure negation: its match-all fix-up applies at the root
             tree = RBool((*tree.children, must), tree.mm, tree.boost)
         req = dataclasses.replace(req, amount=amount)
-        return self._search_resolved({"q": (req, [], tree)})["q"]
+        return self._search_resolved({"q": (req, tree)})["q"]
 
     def search_numeric_set(
         self,

@@ -1,9 +1,12 @@
-"""Boolean clause combination over dense per-doc arrays.
+"""Boolean query evaluation over dense per-doc arrays.
 
-Shared by the exhaustive oracle (over corpus rows) and the per-shard
-DAAT kernel (over a shard's doc-id space) so Lucene BooleanQuery
-semantics (ZuliaIndex.generateClause:780-835) are implemented exactly
-once:
+:func:`evaluate_tree` is the kernel's one evaluator: every request,
+clause model and query string alike, reaches it as one resolved
+boolean tree (parser.RBool / RLeaf). :func:`combine_clauses` is the
+exhaustive oracle's own evaluator of the flat clause model
+(oracle/bm25_oracle.py), written independently of the tree so the
+oracle checks the kernel rather than sharing its code. Both implement
+Lucene BooleanQuery semantics (ZuliaIndex.generateClause:780-835):
 
 - SCORE_MUST / FILTER / TERMS constrain the match set (FILTER/TERMS
   contribute no score);
@@ -150,62 +153,72 @@ def evaluate_tree(root, term_vectors, n: int, parity: bool):
     A top-level query of only prohibited clauses matches everything
     else (the reference's MatchAll fix-up, ZuliaIndex.java:715-717);
     NESTED pure-negative groups match nothing, as in Lucene.
+
+    A node's boost is folded into its leaves' weights — the product of
+    the boosts on the path from the root, times the spec's field
+    boost — the way Lucene's ``createWeight(boost)`` pushes a
+    BoostQuery's boost down to the term weights instead of scaling the
+    summed score.
     """
     from zuliasearch_spark.search.parser import MUST, MUST_NOT, RBool, RLeaf
 
-    def eval_node(node, top: bool):
+    def eval_node(node, top: bool, boost: float):
+        # children's arrays are never written in place: a doc-values
+        # leaf's mask is shared by every request of the batch
+        boost = boost * node.boost
         if isinstance(node, RLeaf):
-            # subgroup algebra shared with combine_clauses: OR across
-            # fields; multi-term tokens conj/disj by default operator
+            # subgroup algebra of combine_clauses: OR across fields;
+            # multi-term tokens conj/disj by default operator
             sub: dict[int, tuple[np.ndarray, np.ndarray, int]] = {}
             for spec in node.specs:
-                m, s = term_vectors(spec, node.boost * getattr(spec, "boost", 1.0))
+                m, s = term_vectors(spec, boost * getattr(spec, "boost", 1.0))
+                s = np.where(m, s, 0.0)
                 got = sub.get(spec.subgroup)
                 if got is None:
-                    sub[spec.subgroup] = (m, np.where(m, s, 0.0), 1)
+                    sub[spec.subgroup] = (m, s, 1)
                 else:
                     pm, ps, cnt = got
-                    nm = (pm & m) if node.conj else (pm | m)
-                    sub[spec.subgroup] = (nm, ps + np.where(m, s, 0.0), cnt + 1)
-            mask = np.zeros(n, dtype=bool)
-            score = np.zeros(n, dtype=np.float64)
+                    sub[spec.subgroup] = ((pm & m) if node.conj else (pm | m), ps + s, cnt + 1)
+            if not sub:
+                return np.zeros(n, dtype=bool), np.zeros(n, dtype=np.float64)
+            mask = score = None
             for m, s, cnt in sub.values():
-                mask |= m
-                score += np.where(m, s, 0.0) if (node.conj and cnt > 1) else s
-            return mask, np.where(mask, score, 0.0)
+                if node.conj and cnt > 1:
+                    s = np.where(m, s, 0.0)  # a partial conjunction scores nothing
+                mask = m if mask is None else mask | m
+                score = s if score is None else score + s
+            return mask, score
         assert isinstance(node, RBool)
-        mask = np.ones(n, dtype=bool)
-        score = np.zeros(n, dtype=np.float64)
-        should_cnt = None
-        has_must = has_should = False
-        neg = np.zeros(n, dtype=bool)
+        must = score = should_cnt = neg = None
         for occur, child in node.children:
-            cm, cs = eval_node(child, False)
+            cm, cs = eval_node(child, False, boost)
+            if occur == MUST_NOT:
+                neg = cm if neg is None else neg | cm
+                continue
+            score = cs if score is None else score + cs
             if occur == MUST:
-                mask &= cm
-                score += cs
-                has_must = True
-            elif occur == MUST_NOT:
-                neg |= cm
+                must = cm if must is None else must & cm
             else:
                 should_cnt = cm.astype(np.int64) if should_cnt is None else should_cnt + cm
-                score += cs
-                has_should = True
-        mask &= ~neg
-        if has_should:
-            req = node.mm if node.mm > 0 else (0 if has_must else 1)
+        mask = must
+        if should_cnt is not None:
+            req = node.mm if node.mm > 0 else (0 if must is not None else 1)
             if req > 0:
-                mask &= should_cnt >= req
-        elif not has_must:
+                ok = should_cnt >= req
+                mask = ok if mask is None else mask & ok
+        if mask is None:
             # only prohibited children: nothing matches (Lucene),
             # unless this is the root and the fix-up applies
             if not top:
-                mask = np.zeros(n, dtype=bool)
-        if node.boost != 1.0:
-            score = score * node.boost
+                return np.zeros(n, dtype=bool), np.zeros(n, dtype=np.float64)
+            mask = np.ones(n, dtype=bool)
+        if neg is not None:
+            mask = mask & ~neg
+        if score is None:
+            return mask, np.zeros(n, dtype=np.float64)
         return mask, np.where(mask, score, 0.0)
 
-    match, total = eval_node(root, True)
+    match, total = eval_node(root, True, 1.0)
     if parity:
         total = total.astype(np.float32).astype(np.float64)
     return match, total

@@ -41,7 +41,6 @@ FILTER_NOT = "FILTER_NOT"
 TERMS = "TERMS"
 TERMS_NOT = "TERMS_NOT"
 
-_SCORING = (SCORE_MUST, SCORE_SHOULD)
 _POSITIVE = (SCORE_MUST, FILTER, TERMS)
 _NEGATIVE = (FILTER_NOT, TERMS_NOT)
 
@@ -63,10 +62,6 @@ class QueryClause:
     # ("exact phrase"~N, ZuliaSyntaxParser.jj:171; needs positions)
     phrase: tuple[str, ...] = ()
     slop: int = 0  # proximity slop for the phrase
-
-    @property
-    def scoring(self) -> bool:
-        return self.type in _SCORING
 
     @property
     def negative(self) -> bool:
@@ -120,11 +115,12 @@ class SearchRequest:
     amount: int = 10
     start: int = 0
     last_result: LastResult | None = None
-    # pruning: True = on (falls back to dense when the clause shape
-    # disallows bounds); None/False = off. Off by default because the
-    # pruned path reports totalHits as a LOWER bound (hits_exact=False)
-    # like Lucene's TOP_SCORES mode, and count-style requests need
-    # exact hits.
+    # pruning: True = on (falls back to dense when the query tree
+    # allows no block-max bound: a non-term leaf, a zero boost on a
+    # scoring path, pure negation); None/False = off. Off by default
+    # because the pruned path reports totalHits as a LOWER bound
+    # (hits_exact=False) like Lucene's TOP_SCORES mode, and
+    # count-style requests need exact hits.
     block_max_pruning: bool | None = None
     # per-field similarity override for this request, e.g.
     # (("content", "TF"),) — FieldSimilarity zulia_query.proto:295-298,
@@ -286,19 +282,6 @@ def warming_request(entry: dict) -> SearchRequest:
     )
 
 
-def iter_stat_keys(resolved) -> set[tuple[str, str]]:
-    """All (field, term) pairs a resolved query needs stats/postings
-    for — TermSpec leaves plus every phrase constituent."""
-    out: set[tuple[str, str]] = set()
-    for rc in resolved:
-        for spec in rc.specs:
-            if isinstance(spec, PhraseSpec):
-                out.update(spec.stat_keys)
-            else:
-                out.add((spec.field, spec.term))
-    return out
-
-
 @dataclass(frozen=True)
 class ResolvedClause:
     clause: QueryClause
@@ -333,12 +316,13 @@ _GRAMMAR_WORDS = ("OR", "AND", "NOT", "TO")
 def clause_q_is_plain(q: str) -> bool:
     """True when clause text is expressible in the plain token model
     (whitespace-separated ``term`` / ``field:term`` tokens) with
-    semantics IDENTICAL to the full query-string grammar — the fast
-    path that keeps simple programmatic clauses on the batch DAAT
-    kernel. Anything else (bool operators, parens, ranges, phrases,
-    fuzzy/wildcard, +/- modifiers, boosts) must go through the full
-    parser, the reference's behavior for every clause
-    (ZuliaIndex.java:946-964 parses each clause's q with
+    semantics IDENTICAL to the full query-string grammar: such text
+    resolves with :func:`resolve_clause`, without a parse. Either way
+    the clause ends up as a subtree of the request's one boolean tree
+    (executor._clauses_to_tree). Anything else (bool operators,
+    parens, ranges, phrases, fuzzy/wildcard, +/- modifiers, boosts)
+    must go through the full parser, the reference's behavior for
+    every clause (ZuliaIndex.java:946-964 parses each clause's q with
     ZuliaFlexibleQueryParser). A lone ``:``-containing token keeps
     its raw right side (e.g. ``added:2024-06-17T16:10:00Z``) — the
     mini model passes it to the field analyzer literally, which the
