@@ -4,7 +4,7 @@
     spark-submit --master local[32] --py-files zuliasearch_spark.zip \\
       scripts/query.py --index /path/index --q "parse query node" \\
       [--type SCORE_SHOULD] [--filter lang:python] [--amount 10] \\
-      [--prune] [--facet lang] [--get-terms content]
+      [--facet lang] [--get-terms content]
 
 Prints one JSON line per request with totalHits + ranked top-k.
 """
@@ -28,7 +28,6 @@ def main() -> None:
     ap.add_argument("--not", dest="not_", action="append", default=[], help="FILTER_NOT clause text")
     ap.add_argument("--amount", type=int, default=10)
     ap.add_argument("--start", type=int, default=0)
-    ap.add_argument("--prune", action="store_true", help="block-max pruning (totalHits → lower bound)")
     ap.add_argument("--facet", help="also return top-10 facet counts for this doc_map column")
     ap.add_argument("--get-terms", help="dictionary scan of this field instead of a search")
     args = ap.parse_args()
@@ -61,13 +60,10 @@ def main() -> None:
         clauses.append(QueryClause("FILTER", q=f))
     for f in args.not_:
         clauses.append(QueryClause("FILTER_NOT", q=f))
-    req = SearchRequest(
-        tuple(clauses), amount=args.amount, start=args.start, block_max_pruning=args.prune or None
-    )
+    req = SearchRequest(tuple(clauses), amount=args.amount, start=args.start)
     res = engine.search(req)
     out = {
         "totalHits": res["totalHits"],
-        "hitsExact": res.get("hitsExact", True),
         "topk": [
             {"uniqueId": t["uniqueId"], "score": round(t["score"], 6)} for t in res["topk"]
         ],

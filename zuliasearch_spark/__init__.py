@@ -7,10 +7,11 @@ Spark DataFrames:
 - code-aware analyzers as vectorized Arrow/pandas kernels
   (``zuliasearch_spark.analysis``),
 - posting-list construction with delta-gap + varint compressed blocks
-  and per-block max-impact metadata (``zuliasearch_spark.indexing``),
-- a BM25 (k1=1.2, b=0.75) top-k executor with document-at-a-time
-  scoring and MaxScore/block-max pruning plus Zulia-style
-  scatter/gather shard merge (``zuliasearch_spark.search``),
+  (``zuliasearch_spark.indexing``),
+- a BM25 (k1=1.2, b=0.75) top-k executor that scores every match
+  densely per shard (exact totalHits, like Lucene's COMPLETE score
+  mode) with a Zulia-style scatter/gather shard merge
+  (``zuliasearch_spark.search``),
 - a pure-Python oracle replicating Lucene BM25 semantics including
   SmallFloat norm quantization (``zuliasearch_spark.oracle``),
 - large-scale training-data pipeline ops: dedup, similarity search,

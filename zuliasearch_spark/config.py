@@ -297,8 +297,8 @@ class IndexConfig:
       skew valve: a term's postings are built per (term, bucket) so a
       hot term ("the", "def") never lands in ONE reducer at 10^12-doc
       scale.
-    - ``block_size``: docs per posting block (delta+varint unit, with
-      per-block max-tf / min-norm for block-max pruning).
+    - ``block_size``: docs per posting block (the delta-gap + varint
+      encoding unit).
     """
 
     index_name: str

@@ -12,7 +12,7 @@ ShardUtil.java:3-20). Here the whole build is a declarative plan:
         ⇒ doc-term rows (field, shard, doc_id, dl, terms[], tfs[])
       → groupBy(field, shard, bucket).applyInArrow(block encoder)
         ⇒ postings blocks (delta-gap varint docIDs, varint TFs,
-          varint dls, per-block max_tf/min_dl/sum_tf) + one NORMS row
+          varint dls, per-block sum_tf) + one NORMS row
           per group (term=NULL: distinct docIDs + field lengths)
       → term_stats / field_stats / shard stats = plain groupBy·agg
         over BLOCK METADATA (no re-tokenize, no decode)
@@ -67,7 +67,7 @@ from zuliasearch_spark.util.varint import varint_encode, varint_encode_with_offs
 POSTINGS_SCHEMA = (
     "field string, shard int, bucket long, term string, block_id int, "
     "first_doc long, last_doc long, n int, doc_bytes binary, tf_bytes binary, "
-    "dl_bytes binary, pos_bytes binary, max_tf int, min_dl int, sum_tf long, sum_dl long"
+    "dl_bytes binary, pos_bytes binary, sum_tf long, sum_dl long"
 )
 
 TALL_SCHEMA = (
@@ -290,8 +290,6 @@ def _make_block_encoder(block_size: int):
                     "tf_bytes": pa.array([b""], type=pa.binary()),
                     "dl_bytes": pa.array([varint_encode(udl)], type=pa.binary()),
                     "pos_bytes": pa.array([b""], type=pa.binary()),
-                    "max_tf": pa.array([0], type=pa.int32()),
-                    "min_dl": pa.array([0], type=pa.int32()),
                     "sum_tf": pa.array([int((udl > 0).sum())], type=pa.int64()),
                     "sum_dl": pa.array([int(udl.sum())], type=pa.int64()),
                 }
@@ -397,8 +395,6 @@ def _make_block_encoder(block_size: int):
                 "tf_bytes": pa.array(tf_bytes, type=pa.binary()),
                 "dl_bytes": pa.array(dl_bytes, type=pa.binary()),
                 "pos_bytes": pa.array(pos_bytes, type=pa.binary()),
-                "max_tf": i32(np.maximum.reduceat(tf, bstarts), 0),
-                "min_dl": i32(np.minimum.reduceat(dl, bstarts), 0),
                 # norms-row sum_tf records the Lucene docCount (docs
                 # with >=1 token) — `n` must stay the byte-stream entry
                 # count for decode, so the stat rides here

@@ -452,10 +452,7 @@ def optimize(spark: SparkSession, path: str, out_path: str, config: IndexConfig)
                         cols["dl_bytes"][i] = varint_encode(dls) if dls.size else b""
                         cols["n"][i] = docs.size
                         if tfs.size:
-                            cols["max_tf"][i] = int(tfs.max())
                             cols["sum_tf"][i] = int(tfs.sum())
-                        if dls.size:
-                            cols["min_dl"][i] = int(dls.min())
                         if pdf["term"].iloc[i] is None and dls.size:
                             cols["sum_dl"][i] = int(dls.sum())
                             # norms-row sum_tf = Lucene docCount (docs

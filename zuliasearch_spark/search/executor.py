@@ -19,13 +19,12 @@ SURVEY.md §3.1) re-expressed for Spark:
    the query terms' blocks are read — then groupBy(shard)
    .applyInPandas(kernel): a per-shard document-at-a-time scoring
    kernel (decode delta-gap varint blocks, dense score accumulation,
-   Lucene float32 BM25, the tree evaluated by matcher.evaluate_tree),
-   with a **block-max pruning** path (below). When a request
-   has doc-values leaves, the scan is instead cogrouped by shard with
-   one narrow doc_map frame — the rows passing any leaf's predicate
-   (pushed into the parquet scan), projected to (shard, doc_id, one
-   flag per leaf) — and each leaf reads its flags as a per-shard mask
-   that scores 0.0. Each shard emits its top (start+amount) rows plus
+   Lucene float32 BM25, the tree evaluated by matcher.evaluate_tree).
+   When a request has doc-values leaves, the scan is instead
+   cogrouped by shard with one narrow doc_map frame — the rows
+   passing any leaf's predicate (pushed into the parquet scan),
+   projected to (shard, doc_id, one flag per leaf) — and each leaf
+   reads its flags as a per-shard mask that scores 0.0. Each shard emits its top (start+amount) rows plus
    a has-more sentinel (the k+1 trick of
    TopScoreDocCollectorManager(k+1), ShardReader.java:279-307).
 3. GATHER (driver): merge the per-shard top-k's by
@@ -41,39 +40,14 @@ this amortizes job/scan/shuffle overhead across the query stream,
 which is how a Spark engine matches a serving engine's throughput:
 queries/sec, not per-query latency.
 
-**Block-max pruning** (`SearchRequest.block_max_pruning=True`): the
-Spark re-expression of Lucene's WAND/MAXSCORE skipping that the
-reference gets implicitly from TopScoreDocCollector's TOP_SCORES mode
-(ShardReader.java:307; per-block impacts in the codec). Per posting
-block we stored (max_tf, min_dl). A request's tree qualifies when
-every leaf is a term and every boost on a MUST/SHOULD path is > 0
-(``_prune_leaves``); then the kernel:
-
-  1. computes each block's score upper bound
-     ub = weight · impact(max_tf, min_dl)  (bm25_max_impact — the
-     impact function is monotone ↑tf, ↓dl, so this bounds every
-     posting in the block); a leaf's weight is the product of the
-     boosts on its path, and MUST_NOT subtrees add nothing;
-  2. scatters block ubs into a dense per-doc upper-bound array UB via
-     a difference array over [first_doc, last_doc] ranges (docIDs are
-     dense per shard);
-  3. exact-scores a SEED of the top-|4k| docs by UB → threshold θ =
-     k-th best exact score of *matching* seed docs;
-  4. final candidates C = {d : UB(d) ≥ θ}; decodes ONLY blocks whose
-     doc range intersects C and exact-scores C (``evaluate_tree``
-     over the candidate subset).
-
-Safety: UB(d) ≥ score(d) for every matching d and θ ≤ true k-th
-score, so the true top-k ⊆ C — returned docIDs and scores are
-identical to the dense path (asserted in tests/test_pruning_batch.py).
-Like Lucene's TOP_SCORES, totalHits becomes a lower bound when
-pruning actually skipped anything (`hits_exact=False` in the
-response). Every matching doc matches some positive-weight term leaf,
-so it lies in the UB universe. A tree whose docs could match with
-score 0 (a FILTER or TERMS clause, which carries boost 0; a ``^0``
-group) or that has a non-term leaf (phrase, doc-values) takes the
-dense path, as does a seed with fewer than k matches — correctness
-never depends on query shape.
+**One top-k path**: every request on every shard scores its whole
+match set densely (``_dense_match``) and ranks it (``_rank_and_page``),
+so totalHits is always exact, as the reference's collector counts
+every hit (TopScoreDocCollectorManager(k+1, after, MAX): Lucene's
+COMPLETE score mode). There is no block skipping: the kernel has
+received every block of every query term over Arrow before it could
+skip one, and a batch decodes each (term, shard) once for all its
+requests (BENCH/NOTES.md measures the deleted block-max route).
 
 The gather moves only O(shards × k) rows to the driver; all heavy
 data stays columnar in executors.
@@ -122,14 +96,12 @@ from zuliasearch_spark.search.query import (
     ResolvedClause,
     SearchRequest,
     TermSetSpec,
-    TermSpec,
     clause_q_is_plain,
     resolve_clause,
 )
 from zuliasearch_spark.search.scorer import (
     Bm25Params,
     bm25_avgdl,
-    bm25_max_impact,
     bm25_term_scores,
     bm25_weight,
 )
@@ -150,7 +122,7 @@ def _require_nonzero_query_vector(vector) -> None:
 
 KERNEL_SCHEMA = (
     "qid string, shard int, doc_id long, score double, total_hits long, "
-    "next_score double, has_next boolean, hits_exact boolean, "
+    "next_score double, has_next boolean, "
     "blocks_decoded long, blocks_total long"
 )
 
@@ -212,11 +184,8 @@ class PostingsStore:
 
     def __init__(self, pdf: pd.DataFrame):
         pdf = pdf.sort_values(["field", "term", "bucket", "block_id"], kind="stable")
-        self.first_doc = pdf["first_doc"].to_numpy(dtype=np.int64)
         self.last_doc = pdf["last_doc"].to_numpy(dtype=np.int64)
         self.n = pdf["n"].to_numpy(dtype=np.int64)
-        self.max_tf = pdf["max_tf"].to_numpy(dtype=np.int64)
-        self.min_dl = pdf["min_dl"].to_numpy(dtype=np.int64)
         self._doc_bytes = pdf["doc_bytes"].to_numpy()
         self._tf_bytes = pdf["tf_bytes"].to_numpy()
         self._dl_bytes = pdf["dl_bytes"].to_numpy()
@@ -247,22 +216,6 @@ class PostingsStore:
     def has(self, key: tuple[str, str]) -> bool:
         return key in self._rows
 
-    def meta(self, key: tuple[str, str]) -> tuple[int, int] | None:
-        return self._rows.get(key)
-
-    def _decode_rows(self, rows: np.ndarray) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-        doc_buf = b"".join(self._doc_bytes[rows])
-        tf_buf = b"".join(self._tf_bytes[rows])
-        dl_buf = b"".join(self._dl_bytes[rows])
-        counts = self.n[rows]
-        seg_starts = np.zeros(counts.size, dtype=np.int64)
-        np.cumsum(counts[:-1], out=seg_starts[1:])
-        docs = segmented_cumsum(varint_decode(doc_buf), seg_starts)
-        tfs = varint_decode(tf_buf)
-        dls = varint_decode(dl_buf)
-        self.blocks_decoded += int(rows.size)
-        return docs, tfs, dls
-
     def decode(self, key: tuple[str, str]) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
         """Decode ALL blocks of a term (cached)."""
         got = self._full_cache.get(key)
@@ -271,7 +224,15 @@ class PostingsStore:
         span = self._rows.get(key)
         if span is None:
             return None
-        out = self._decode_rows(np.arange(span[0], span[1], dtype=np.int64))
+        rows = slice(span[0], span[1])
+        counts = self.n[rows]
+        seg_starts = np.zeros(counts.size, dtype=np.int64)
+        np.cumsum(counts[:-1], out=seg_starts[1:])
+        docs = segmented_cumsum(varint_decode(b"".join(self._doc_bytes[rows])), seg_starts)
+        tfs = varint_decode(b"".join(self._tf_bytes[rows]))
+        dls = varint_decode(b"".join(self._dl_bytes[rows]))
+        self.blocks_decoded += counts.size
+        out = (docs, tfs, dls)
         self._full_cache[key] = out
         return out
 
@@ -307,29 +268,6 @@ class PostingsStore:
         self._pos_cache[key] = out
         return out
 
-    def decode_overlapping(
-        self, key: tuple[str, str], cand_sorted: np.ndarray
-    ) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
-        """Decode only blocks whose [first_doc, last_doc] range hits a
-        candidate doc — the block-skipping half of block-max pruning."""
-        got = self._full_cache.get(key)
-        if got is not None:
-            return got
-        span = self._rows.get(key)
-        if span is None:
-            return None
-        rows = np.arange(span[0], span[1], dtype=np.int64)
-        lo = np.searchsorted(cand_sorted, self.first_doc[rows], side="left")
-        hi = np.searchsorted(cand_sorted, self.last_doc[rows], side="right")
-        rows = rows[lo < hi]
-        if rows.size == 0:
-            return (
-                np.empty(0, dtype=np.int64),
-                np.empty(0, dtype=np.int64),
-                np.empty(0, dtype=np.int64),
-            )
-        return self._decode_rows(rows)
-
 
 @dataclass(frozen=True)
 class _QueryPlan:
@@ -339,7 +277,6 @@ class _QueryPlan:
     tree: RBool  # the request's resolved boolean tree
     per_shard_amount: int
     after_by_shard: dict[int, tuple[float, int]]
-    prune: bool
     sims: tuple[tuple[str, str], ...] = ()  # per-field similarity override
 
 
@@ -670,34 +607,6 @@ def _phrase_weight(pspec: PhraseSpec, shard, idf_by_key, params):
     return (sb, sc)
 
 
-def _subset_term_vectors(store, n_sub, shard, idf_by_key, avgdl_by_key, params, cand_sorted):
-    """term_vectors over a candidate subset: arrays indexed by candidate
-    position, postings gathered via searchsorted on the decoded doc
-    lists of the blocks overlapping the candidates. Only BM25
-    ``TermSpec`` leaves reach it (:func:`_prune_leaves`)."""
-
-    def term_vectors(spec: TermSpec, boost: float) -> tuple[np.ndarray, np.ndarray]:
-        mask = np.zeros(n_sub, dtype=bool)
-        score = np.zeros(n_sub, dtype=np.float64)
-        entry = store.decode_overlapping((spec.field, spec.term), cand_sorted)
-        if entry is None:
-            return mask, score
-        docs, tfs, dls = entry
-        if docs.size == 0:
-            return mask, score
-        pos = np.searchsorted(docs, cand_sorted)
-        ok = (pos < docs.size) & (docs[np.minimum(pos, docs.size - 1)] == cand_sorted)
-        mask[ok] = True
-        idf = idf_by_key.get((spec.field, spec.term, shard))
-        if idf is not None and ok.any():
-            avgdl = avgdl_by_key[(spec.field, shard)]
-            sel = pos[ok]
-            score[ok] = _leaf_scores("BM25", tfs[sel], dls[sel], boost, idf, avgdl, params)
-        return mask, score
-
-    return term_vectors
-
-
 def _dense_term_vectors(store, n, shard, idf_by_key, avgdl_by_key, params, sims=None, dv=None):
     """``dv`` maps each doc-values leaf's SQL to the shard's mask of
     flagged docs (:func:`_dv_masks`)."""
@@ -954,34 +863,6 @@ def _rank_and_page(idx: np.ndarray, scores: np.ndarray, after, per_shard_amount:
     return top, tscores, has_next, next_score
 
 
-def _prune_leaves(tree) -> list[tuple[TermSpec, float]] | None:
-    """(leaf, weight) of every MUST/SHOULD leaf, the weight being the
-    product of the boosts on its path (what evaluate_tree passes to
-    the leaf), or None when the tree allows no block-max bound: a leaf
-    that is not a term (phrase freq, constant-score and doc-values
-    leaves have no per-block impact), a zero boost on a MUST/SHOULD
-    path (its docs match with score 0, outside the UB universe), or
-    no positive leaf at all (pure negation). MUST_NOT subtrees add
-    nothing to the bound."""
-    out: list[tuple[TermSpec, float]] = []
-    stack = [(tree, 1.0, False)]
-    while stack:
-        node, boost, negated = stack.pop()
-        boost = boost * node.boost
-        if isinstance(node, RBool):
-            stack.extend((c, boost, negated or o == _MUST_NOT) for o, c in node.children)
-            continue
-        for spec in node.specs:
-            if not isinstance(spec, TermSpec):
-                return None
-            if not negated:
-                w = boost * spec.boost
-                if not w > 0:
-                    return None
-                out.append((spec, w))
-    return out or None
-
-
 def _apply_tombstones(match: np.ndarray, deleted) -> np.ndarray:
     """``match`` without the tombstoned docs (a copy: the evaluator's
     mask may be a doc-values leaf's, shared across the batch)."""
@@ -997,121 +878,6 @@ def _dense_match(plan: _QueryPlan, store, shard, n, idf_by_key, avgdl_by_key, pa
     tv = _dense_term_vectors(store, n, shard, idf_by_key, avgdl_by_key, params, dict(plan.sims), dv)
     match, total = evaluate_tree(plan.tree, tv, n, params.lucene_parity)
     return _apply_tombstones(match, deleted), total
-
-
-def _run_query_on_shard(
-    plan: _QueryPlan,
-    store: PostingsStore,
-    shard: int,
-    n: int,
-    idf_by_key,
-    avgdl_by_key,
-    params: Bm25Params,
-    deleted=None,
-    dv=None,
-):
-    """Execute one request against one shard's postings.
-
-    Returns (top_docs, top_scores, total_hits, has_next, next_score,
-    hits_exact).
-    """
-    after = plan.after_by_shard.get(shard)
-    k = plan.per_shard_amount
-
-    if plan.prune and not plan.sims and deleted is None:
-        # (pruning bounds assume BM25 impacts; similarity overrides
-        # and tombstones fall back to dense)
-        result = _pruned_search(plan.tree, store, shard, n, idf_by_key, avgdl_by_key, params, after, k)
-        if result is not None:
-            return result
-
-    # dense path: exact totalHits, exact top-k
-    match, total = _dense_match(plan, store, shard, n, idf_by_key, avgdl_by_key, params, deleted, dv)
-    total_hits = int(match.sum())
-    idx = np.flatnonzero(match)
-    top, tscores, has_next, next_score = _rank_and_page(idx, total[idx], after, k)
-    return top, tscores, total_hits, has_next, next_score, True
-
-
-def _pruned_search(tree, store, shard, n, idf_by_key, avgdl_by_key, params, after, k):
-    """Block-max pruning (docstring at module top). Returns None to
-    signal dense fallback."""
-    leaves = _prune_leaves(tree)
-    if leaves is None:
-        return None
-
-    # 1-2. dense per-doc upper bound via difference array over block ranges
-    ub_diff = np.zeros(n + 1, dtype=np.float64)
-    any_blocks = False
-    for spec, boost in leaves:
-        span = store.meta((spec.field, spec.term))
-        if span is None:
-            continue
-        idf = idf_by_key.get((spec.field, spec.term, shard))
-        if idf is None:
-            continue
-        avgdl = avgdl_by_key[(spec.field, shard)]
-        bm25_idf_v = idf[0]
-        w = float(np.float32(boost) * np.float32(bm25_idf_v)) if params.lucene_parity else boost * bm25_idf_v
-        rows = np.arange(span[0], span[1], dtype=np.int64)
-        # vectorized block impact: ub = w * f(max_tf, min_dl)
-        impacts = bm25_term_scores(store.max_tf[rows], store.min_dl[rows], w, avgdl, params)
-        np.add.at(ub_diff, store.first_doc[rows], impacts)
-        np.subtract.at(ub_diff, store.last_doc[rows] + 1, impacts)
-        any_blocks = True
-    if not any_blocks:
-        return None
-    ub = np.cumsum(ub_diff[:-1])
-    universe = np.flatnonzero(ub > 1e-12)
-    if universe.size == 0:
-        return None
-
-    def exact(cands: np.ndarray):
-        tv = _subset_term_vectors(store, cands.size, shard, idf_by_key, avgdl_by_key, params, cands)
-        m, t = evaluate_tree(tree, tv, cands.size, params.lucene_parity)
-        return cands[m], t[m]
-
-    seed_size = max(4 * k, 64)
-    if universe.size <= seed_size:
-        docs, scores = exact(universe)
-        return _finish(docs, scores, after, k)
-
-    # 3. seed: top docs by UB → threshold θ
-    part = np.argpartition(ub[universe], universe.size - seed_size)[-seed_size:]
-    seed = np.sort(universe[part])
-    sdocs, sscores = exact(seed)
-    if after is not None:
-        a_score, a_doc = after
-        keep = (sscores < a_score) | ((sscores == a_score) & (sdocs > a_doc))
-        sdocs, sscores = sdocs[keep], sscores[keep]
-    if sdocs.size < k:
-        return None  # not enough matches in seed: dense fallback
-    theta = np.partition(sscores, sscores.size - k)[sscores.size - k]
-
-    # 4. final candidates: every doc whose upper bound can reach θ.
-    # Slack is RELATIVE to θ: exact scores are float32-rounded in
-    # parity mode while UB is a float64 sum of per-leaf f32 bounds, so
-    # an absolute epsilon (1e-9) is smaller than a float32 ulp at
-    # score ≳ 1 and could wrongly prune a true top-k doc whose UB ties
-    # θ within rounding. max(abs-eps, rel-eps·θ) covers both regimes.
-    slack = max(1e-9, abs(theta) * 1e-6)
-    cands = universe[ub[universe] >= theta - slack]
-    docs, scores = exact(cands)
-    pruned_any = cands.size < universe.size
-    top, tscores, has_next, next_score = _rank_and_page(docs, scores, after, k)
-    total_hits = int(docs.size)  # lower bound when pruned_any
-    if not has_next and pruned_any and tscores.size:
-        # pruned shard whose page was NOT truncated by ranking: the
-        # oversample combiner needs a displacement bound, and NaN rows
-        # are dropped there — use the shard's last returned score,
-        # mirroring QueryCombiner's use of the shard's last result
-        next_score = float(tscores[-1])
-    return top, tscores, total_hits, has_next or pruned_any, next_score, not pruned_any
-
-
-def _finish(docs, scores, after, k):
-    top, tscores, has_next, next_score = _rank_and_page(docs, scores, after, k)
-    return top, tscores, int(docs.size), has_next, next_score, True
 
 
 def _make_kernel(
@@ -1147,18 +913,16 @@ def _make_kernel(
                 return pd.DataFrame(columns=columns)
         deleted = (tombstones or {}).get(shard)
         dv = _dv_masks(dv_pdf, dv_sqls, n) if dv_pdf is not None else None
-        if full_match:
-            match, total = _dense_match(
-                plans[0], store, shard, n, idf_by_key, avgdl_by_key, params, deleted, dv
-            )
-            idx = np.flatnonzero(match)
-            return pd.DataFrame(
-                {"shard": np.int32(shard), "doc_id": idx.astype(np.int64), "score": total[idx]}
-            )
         frames = []
         for plan in plans:
-            top, tscores, total_hits, has_next, next_score, hits_exact = _run_query_on_shard(
-                plan, store, shard, n, idf_by_key, avgdl_by_key, params, deleted, dv
+            match, total = _dense_match(plan, store, shard, n, idf_by_key, avgdl_by_key, params, deleted, dv)
+            idx = np.flatnonzero(match)
+            if full_match:
+                return pd.DataFrame(
+                    {"shard": np.int32(shard), "doc_id": idx.astype(np.int64), "score": total[idx]}
+                )
+            top, tscores, has_next, next_score = _rank_and_page(
+                idx, total[idx], plan.after_by_shard.get(shard), plan.per_shard_amount
             )
             if top.size == 0:
                 # still report totalHits/metrics for this shard
@@ -1170,10 +934,9 @@ def _make_kernel(
                         "shard": np.int32(shard),
                         "doc_id": top.astype(np.int64),
                         "score": tscores,
-                        "total_hits": np.int64(total_hits),
+                        "total_hits": np.int64(idx.size),
                         "next_score": next_score,
                         "has_next": has_next,
-                        "hits_exact": hits_exact,
                     }
                 )
             )
@@ -1291,8 +1054,8 @@ class SearchEngine:
         (AnalyzerSettings.similarity, zulia_index.proto:313) merged
         with the request's FieldSimilarity overrides, like
         ShardReader.getSimilarity:537-579. Only non-BM25 entries are
-        kept, so an all-BM25 request keeps the block-max prune path.
-        Unknown names raise, as the reference does."""
+        kept: BM25 is the kernel's default, so every all-BM25 request
+        plans alike. Unknown names raise, as the reference does."""
         overrides = dict(req.similarities)
         out: dict[str, str] = {}
         for f in fields:
@@ -1825,14 +1588,13 @@ class SearchEngine:
                     tree=tree,
                     per_shard_amount=k_shard,
                     after_by_shard=after,
-                    prune=bool(req.block_max_pruning),
                     sims=self._effective_sims(req, {f for f, _ in tree_stat_keys(tree)}),
                 )
             )
 
         frame = self._kernel_frame(qplans)
         if frame is None:
-            return {qid: {"totalHits": 0, "topk": [], "hitsExact": True} for qid in reqs}
+            return {qid: {"totalHits": 0, "topk": []} for qid in reqs}
         import time as _time
 
         _t0 = _time.perf_counter()
@@ -1847,9 +1609,7 @@ class SearchEngine:
             "blocks_total": int(per_shard_df["blocks_total"].sum()),
             "job_ms": int((_t_job - _t0) * 1000),
         }
-        qstats = pdf.drop_duplicates(["qid", "shard"]).groupby("qid").agg(
-            total_hits=("total_hits", "sum"), hits_exact=("hits_exact", "min")
-        )
+        th_map = pdf.drop_duplicates(["qid", "shard"]).groupby("qid")["total_hits"].sum().to_dict()
         hits = pdf[pdf["doc_id"] >= 0].sort_values(
             ["qid", "score", "shard", "doc_id"], ascending=[True, False, True, True], kind="stable"
         )
@@ -1875,12 +1635,9 @@ class SearchEngine:
                 )
 
         results: dict[str, dict] = {}
-        th_map = qstats["total_hits"].to_dict()
-        he_map = qstats["hits_exact"].to_dict()
         all_topk: list[dict] = []
         for qid, req in reqs.items():
             total_hits = int(th_map.get(qid, 0))
-            hits_exact = bool(he_map.get(qid, True))
             if qid in neg_qids:
                 # MatchAll fix-up: shards where the negative terms have
                 # no postings produced no kernel group, yet ALL their
@@ -1916,7 +1673,7 @@ class SearchEngine:
             else:
                 topk = topk_by_qid[qid]
             all_topk.extend(topk)
-            results[qid] = {"totalHits": total_hits, "topk": topk, "hitsExact": hits_exact}
+            results[qid] = {"totalHits": total_hits, "topk": topk}
 
         # short-result detection + exact retry (QueryCombiner.java:
         # 146-382 compares each shard's "next" against the merged
@@ -2170,7 +1927,6 @@ class SearchEngine:
             tree=tree,
             per_shard_amount=0,
             after_by_shard={},
-            prune=False,
             sims=self._effective_sims(req, {f for f, _ in tree_stat_keys(tree)}),
         )
         frame = self._kernel_frame([plan], full_match=True)
@@ -2965,7 +2721,7 @@ class SearchEngine:
                 }
                 for r in rows
             ]
-            return {"totalHits": total, "topk": out, "hitsExact": True}
+            return {"totalHits": total, "topk": out}
         rows = top.collect()
         out = [
             {
@@ -2977,7 +2733,7 @@ class SearchEngine:
             for r in rows
         ]
         out.sort(key=lambda t: (-t["score"], t["shard"], t["doc_id"]))
-        return {"totalHits": len(out), "topk": out[:amount], "hitsExact": True}
+        return {"totalHits": len(out), "topk": out[:amount]}
 
     def _sort_key_expr(self, col: str):
         """Resolve a sort field name to its column expression,
@@ -4610,8 +4366,7 @@ class SearchEngine:
                     )
             if not clauses and not has_vector:
                 return {
-                    "totalHits": 0, "topk": [], "hitsExact": True,
-                    "terms": [], "termsByField": terms_by_field,
+                    "totalHits": 0, "topk": [], "terms": [], "termsByField": terms_by_field,
                 }
 
         all_terms = [t for f in fields for t in terms_by_field.get(f, ())]
@@ -4628,7 +4383,7 @@ class SearchEngine:
                 # source docs below the page can't be counted exactly
                 # from the page alone; the reference's MUST_NOT removes
                 # them index-side. Subtract the ones we saw; deeper
-                # source matches keep hitsExact semantics (they matched).
+                # source matches stay counted (they matched).
                 res["totalHits"] -= len(dropped)
             res["terms"] = all_terms
             res["termsByField"] = terms_by_field
@@ -4649,8 +4404,7 @@ class SearchEngine:
             ]
             return {
                 "totalHits": len(topk), "topk": topk[:amount],
-                "hitsExact": True, "terms": all_terms,
-                "termsByField": terms_by_field,
+                "terms": all_terms, "termsByField": terms_by_field,
             }
 
         # ---- hybrid: lexical SHOULD + weighted vector SHOULD -------------
@@ -4728,7 +4482,6 @@ class SearchEngine:
             # lexical matches extend beyond the KNN pool
             "totalHits": lex_total + len(knn_only),
             "topk": topk,
-            "hitsExact": True,
             "terms": all_terms,
             "termsByField": terms_by_field,
         }

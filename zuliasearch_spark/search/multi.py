@@ -54,9 +54,9 @@ class MultiIndexSearcher:
         """Search the named indexes (default: all) and merge.
 
         Each hit carries its source ``index``; totalHits sums across
-        indexes; hitsExact ANDs. Scores are comparable across indexes
-        in exactly the sense the reference's are: each computed from
-        its own index's statistics.
+        indexes. Scores are comparable across indexes in exactly the
+        sense the reference's are: each computed from its own index's
+        statistics.
         """
         from concurrent.futures import ThreadPoolExecutor
         from dataclasses import replace
@@ -66,7 +66,6 @@ class MultiIndexSearcher:
         )
         merged: list[dict] = []
         total_hits = 0
-        hits_exact = True
         # every index must contribute the full page depth, like each
         # shard does in the single-index scatter (start folds into the
         # per-index amount; the page cut happens at the merge)
@@ -79,12 +78,10 @@ class MultiIndexSearcher:
             results = list(pool.map(lambda n: (n, self.engines[n].search(sub)), names))
         for name, res in results:
             total_hits += res["totalHits"]
-            hits_exact = hits_exact and res.get("hitsExact", True)
             for t in res["topk"]:
                 merged.append({**t, "index": name})
         merged.sort(key=lambda t: (-t["score"], t["index"], t["shard"], t["doc_id"]))
         return {
             "totalHits": total_hits,
             "topk": merged[req.start : req.start + req.amount],
-            "hitsExact": hits_exact,
         }

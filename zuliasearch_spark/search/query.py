@@ -115,13 +115,6 @@ class SearchRequest:
     amount: int = 10
     start: int = 0
     last_result: LastResult | None = None
-    # pruning: True = on (falls back to dense when the query tree
-    # allows no block-max bound: a non-term leaf, a zero boost on a
-    # scoring path, pure negation); None/False = off. Off by default
-    # because the pruned path reports totalHits as a LOWER bound
-    # (hits_exact=False) like Lucene's TOP_SCORES mode, and
-    # count-style requests need exact hits.
-    block_max_pruning: bool | None = None
     # per-field similarity override for this request, e.g.
     # (("content", "TF"),) — FieldSimilarity zulia_query.proto:295-298,
     # dispatched like ShardReader.getSimilarity:537-579

@@ -88,21 +88,3 @@ def bm25_term_scores(
         return (w - w / (F32(1.0) + freq * norm_inv)).astype(F32)
     denom = tf + params.k1 * ((1.0 - params.b) + params.b * dl.astype(np.float64) / avgdl)
     return weight * (tf.astype(np.float64) / denom)
-
-
-def bm25_max_impact(max_tf: int, min_dl: int, avgdl: float, params: Bm25Params) -> float:
-    """Upper bound of tf/(tf + k1*(1-b+b*dl/avgdl)) over a posting block.
-
-    ``f`` is increasing in tf and decreasing in dl, so evaluating at
-    (block max_tf, block min_dl) bounds every posting in the block —
-    the per-block metadata backing block-max pruning (the analogue of
-    Lucene's per-block impacts that give it WAND/MAXSCORE skipping).
-    """
-    scores = bm25_term_scores(
-        np.array([max_tf], dtype=np.int64),
-        np.array([min_dl], dtype=np.int64),
-        1.0,
-        avgdl,
-        params,
-    )
-    return float(scores[0])
