@@ -48,21 +48,13 @@ def main() -> None:
     ap.add_argument("--build-id", default="build-0")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession, functions as F
+    from pyspark.sql import functions as F
 
     from zuliasearch_spark.config import IndexConfig
     from zuliasearch_spark.indexing.segments import SegmentedIndexWriter
+    from zuliasearch_spark.session import get_spark
 
-    from zuliasearch_spark.util.alloc import export_env, worker_env_configs
-
-    export_env()
-    builder = SparkSession.builder.appName("zulia-spark-build").config(
-        "spark.sql.execution.arrow.maxRecordsPerBatch", "1024"
-    )
-    for k, v in worker_env_configs().items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = get_spark("zulia-spark-build")
 
     if args.config:
         with open(args.config) as f:

@@ -32,15 +32,13 @@ def main() -> None:
     ap.add_argument("--get-terms", help="dictionary scan of this field instead of a search")
     args = ap.parse_args()
 
-    from pyspark.sql import SparkSession
-
     from zuliasearch_spark.config import IndexConfig
     from zuliasearch_spark.indexing.segments import read_segmented_index
     from zuliasearch_spark.search.executor import SearchEngine
     from zuliasearch_spark.search.query import QueryClause, SearchRequest
+    from zuliasearch_spark.session import get_spark
 
-    spark = SparkSession.builder.appName("zulia-spark-query").getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    spark = get_spark("zulia-spark-query")
 
     with open(os.path.join(args.index, "index_config.json")) as f:
         cfg = IndexConfig.from_json(f.read())

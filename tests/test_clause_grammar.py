@@ -277,3 +277,22 @@ def test_facets_over_clause_grammar_request(spark):
         assert got == {"red": 3}
     finally:
         tables.unpersist()
+
+
+def test_unknown_clause_type_rejected():
+    # a misspelt type must not run silently as a MUST clause
+    with pytest.raises(ValueError, match="unknown clause type"):
+        C("SCORE_MUST_NOT", q="alpha")
+
+
+def test_clause_default_op_rejected():
+    # anything but AND/OR must not combine silently as OR
+    with pytest.raises(ValueError, match="default_op"):
+        C("SCORE_MUST", q="alpha beta", default_op="ANDD")
+    assert C("SCORE_MUST", q="alpha beta", default_op="and").default_op == "and"
+
+
+def test_request_default_op_rejected():
+    with pytest.raises(ValueError, match="default_op"):
+        SearchRequest(qs="alpha beta", default_op="ANDD")
+    assert SearchRequest(qs="alpha beta", default_op="Or").default_op == "Or"

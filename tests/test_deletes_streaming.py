@@ -35,6 +35,28 @@ def test_delete_masks_and_counts(spark, corpus_t1):
         # deletions), and re-deleting already-tombstoned ids is a no-op
         assert sum(eng.get_number_of_docs().values()) == len(corpus_t1) - 3
         assert eng.delete_by_unique_ids(victims) == 0
+        # tombstone doc 0 of every shard: each shard still answers a
+        # pure negation with the rest of its live docs, whether the
+        # negated terms have postings in it or in no shard at all
+        ids = eng._id_column()
+        eng.delete_by_unique_ids([str(ids[s][0]) for s in sorted(ids)])
+        dead = set(victims) | {str(ids[s][0]) for s in ids}
+        live = [str(u) for s in sorted(ids) for u in ids[s] if str(u) not in dead]
+        lang = dict(zip(corpus_t1["uniqueId"], corpus_t1["lang"]))
+        negs = {
+            "absent": (C("FILTER_NOT", q="lang:nonexistentlang"), live),
+            "go": (C("FILTER_NOT", q="lang:go"), [u for u in live if lang[u] != "go"]),
+            "empty": (C("FILTER_NOT", q=","), live),
+        }
+        assert len(negs["go"][1]) < len(live)
+        reqs = {k: SearchRequest((c,), amount=5, start=3) for k, (c, _) in negs.items()}
+        batch = eng.search_many(reqs)
+        for k, (_, want) in negs.items():
+            for got in (eng.search(reqs[k]), batch[k]):
+                # every hit scores 0: the page is the live docs in
+                # (shard, doc_id) order
+                assert got["totalHits"] == len(want), k
+                assert [t["uniqueId"] for t in got["topk"]] == want[3:8], k
     finally:
         tables.unpersist()
 

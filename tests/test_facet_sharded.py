@@ -98,3 +98,12 @@ def test_merged_counts_never_exceed_truth_plus_error(engine):
     )
     for r in df.collect():
         assert r["cnt"] <= truth[r["value"]] <= r["cnt"] + r["max_error"], r
+
+
+def test_pure_negation_facets_every_live_doc(engine):
+    # a request of only negative clauses matches every doc its
+    # negations leave (the reference's MatchAll fix-up); "beta" has
+    # postings in no shard, so each shard answers from its doc_map
+    req = SearchRequest((C("FILTER_NOT", q="content:beta"),), amount=1)
+    rows = [(r["value"], r["cnt"]) for r in engine.facet_counts(req, "cat").collect()]
+    assert rows == [("b", 17), ("a", 12), ("c", 12), ("e", 6), ("d", 4)]

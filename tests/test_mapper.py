@@ -153,6 +153,19 @@ def test_settings_to_index_config():
         Mapper(NoSettings).index_config()
 
 
+def test_settings_json_with_retired_sizing_keys_loads():
+    # settings files written while per-shard request sizing existed
+    # still carry its three keys
+    import json
+
+    from zuliasearch_spark.config import IndexConfig
+
+    cfg = Mapper(Article).index_config()
+    d = json.loads(cfg.to_json())
+    d.update(request_factor=2.0, min_shard_request=2, shard_tolerance=0.0)
+    assert IndexConfig.from_json(json.dumps(d)) == IndexConfig.from_json(cfg.to_json())
+
+
 # ---- engine round-trip (createStore -> search -> fetch) ------------------
 
 

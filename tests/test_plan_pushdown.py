@@ -58,9 +58,7 @@ def parquet_engine(spark, tmp_path_factory):
 def test_range_predicate_pushes_to_parquet(parquet_engine):
     from zuliasearch_spark.search.parser import RRange
 
-    pred = parquet_engine._range_predicate(
-        [("MUST", RRange(("n",), "5", "9", True, True))]
-    )
+    pred = parquet_engine._range_predicate(RRange(("n",), "5", "9", True, True))
     df = parquet_engine.tables.doc_map.filter(pred)
     pushed = _pushed_filters(df)
     assert "GreaterThanOrEqual(n,5)" in pushed and "LessThanOrEqual(n,9)" in pushed, (
@@ -72,9 +70,7 @@ def test_range_predicate_pushes_to_parquet(parquet_engine):
 def test_numeric_set_predicate_pushes_to_parquet(parquet_engine):
     from zuliasearch_spark.search.parser import RNumericSet
 
-    pred = parquet_engine._range_predicate(
-        [("MUST", RNumericSet(("n",), ("5", "7")))]
-    )
+    pred = parquet_engine._range_predicate(RNumericSet(("n",), ("5", "7")))
     pushed = _pushed_filters(parquet_engine.tables.doc_map.filter(pred))
     assert "In(n" in pushed, f"IN set must push, got [{pushed}] for {pred!r}"
 
@@ -113,9 +109,7 @@ def test_positive_range_drops_nulls(parquet_engine):
 def test_alias_or_expansion_still_pushes(parquet_engine):
     from zuliasearch_spark.search.parser import RRange
 
-    pred = parquet_engine._range_predicate(
-        [("MUST", RRange(("n", "n"), "5", None, True, True))]
-    )
+    pred = parquet_engine._range_predicate(RRange(("n", "n"), "5", None, True, True))
     pushed = _pushed_filters(parquet_engine.tables.doc_map.filter(pred))
     assert "GreaterThanOrEqual(n,5)" in pushed
 

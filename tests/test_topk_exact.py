@@ -35,6 +35,12 @@ SHAPES = {
     "qs_or3": "737 parse merge",
     "filtered": (C("SCORE_SHOULD", q="index", qf=("content",)), C("FILTER", q="lang:python")),
     "neg_only": (C("FILTER_NOT", q="lang:go"),),
+    # pure negations whose terms have postings in one shard, in no
+    # shard, and none at all (the text analyzes to no terms): every
+    # shard still answers with its live docs
+    "neg_rare": (C("FILTER_NOT", q="737", qf=("content",)),),
+    "neg_absent": (C("FILTER_NOT", q="zzqxqzz", qf=("content",)),),
+    "neg_empty": (C("FILTER_NOT", q=",", qf=("content",)),),
     # a zero boost on a scoring clause: its docs match with score 0
     # and still count in totalHits ("164" is a content term of one
     # document)

@@ -331,9 +331,6 @@ class IndexConfig:
     # stats aggregate over all segments of the same true shard (all
     # Lucene segments of a shard share the reader's df/avgdl)
     segment_stride: int | None = None
-    request_factor: float = 2.0  # zulia_index.proto:39
-    min_shard_request: int = 2  # zulia_index.proto:40
-    shard_tolerance: float = 0.0  # zulia_index.proto:41
     # query-result cache (shardQueryCacheSize /
     # shardQueryCacheMaxAmount, zulia_index.proto:43-44). 0 disables;
     # the reference defaults 512/256 — explicit opt-in here so
@@ -555,6 +552,11 @@ class IndexConfig:
         import json
 
         d = json.loads(text)
+        # per-shard request sizing (zulia_index.proto:39-41) is
+        # retired: every shard ranks its whole match set, so settings
+        # files that still carry these keys load without them
+        for retired in ("request_factor", "min_shard_request", "shard_tolerance"):
+            d.pop(retired, None)
         d["default_search_fields"] = tuple(d.get("default_search_fields", ()))
         d["warming_searches"] = tuple(d.get("warming_searches", ()) or ())
         d["field_configs"] = tuple(

@@ -108,9 +108,6 @@ def not_saved(default=MISSING, default_factory=MISSING):
 def settings(
     index_name: str,
     number_of_shards: int = 1,
-    request_factor: float = 2.0,
-    min_shard_request: int = 2,
-    shard_tolerance: float = 0.0,
     shard_query_cache_size: int = 512,
     shard_query_cache_max_amount: int = 256,
     **extra,
@@ -122,9 +119,6 @@ def settings(
         cls.__zulia_settings__ = {
             "index_name": index_name,
             "number_of_shards": number_of_shards,
-            "request_factor": request_factor,
-            "min_shard_request": min_shard_request,
-            "shard_tolerance": shard_tolerance,
             "query_cache_size": shard_query_cache_size,
             "query_cache_max_amount": shard_query_cache_max_amount,
             **extra,

@@ -20,17 +20,19 @@ SURVEY.md §3.1) re-expressed for Spark:
    .applyInPandas(kernel): a per-shard document-at-a-time scoring
    kernel (decode delta-gap varint blocks, dense score accumulation,
    Lucene float32 BM25, the tree evaluated by matcher.evaluate_tree).
-   When a request has doc-values leaves, the scan is instead
-   cogrouped by shard with one narrow doc_map frame — the rows
-   passing any leaf's predicate (pushed into the parquet scan),
-   projected to (shard, doc_id, one flag per leaf) — and each leaf
-   reads its flags as a per-shard mask that scores 0.0. Each shard emits its top (start+amount) rows plus
-   a has-more sentinel (the k+1 trick of
-   TopScoreDocCollectorManager(k+1), ShardReader.java:279-307).
-3. GATHER (driver): merge the per-shard top-k's by
-   (score desc, shard asc, doc_id asc) — ZuliaPostSortingComparator
-   semantics — sum totalHits and apply `start`
-   (QueryCombiner.java:146-382).
+   When a request has doc-values leaves or no positive leaf, the scan
+   is instead cogrouped by shard with one narrow doc_map frame — the
+   rows passing any leaf's predicate (pushed into the parquet scan)
+   plus each shard's doc 0, projected to (shard, doc_id, one flag per
+   leaf) — so every shard holding docs answers, and each leaf reads
+   its flags as a per-shard mask that scores 0.0. Each shard emits
+   its top (start+amount) rows and its totalHits.
+3. GATHER (driver): one vectorized page cut for every request —
+   merge the per-shard top-k's by (score desc, shard asc, doc_id asc)
+   (ZuliaPostSortingComparator semantics), sum totalHits and apply
+   `start` (QueryCombiner.java:146-382). A pure negation needs no
+   driver-side fix-up: every shard already evaluated its match-all
+   (ZuliaIndex.java:715-717) in the kernel.
 
 **Batch execution** (`search_many`): N queries run as ONE Spark job —
 one pushdown scan over the union of all query terms, one shuffle, one
@@ -122,7 +124,6 @@ def _require_nonzero_query_vector(vector) -> None:
 
 KERNEL_SCHEMA = (
     "qid string, shard int, doc_id long, score double, total_hits long, "
-    "next_score double, has_next boolean, "
     "blocks_decoded long, blocks_total long"
 )
 
@@ -184,7 +185,6 @@ class PostingsStore:
 
     def __init__(self, pdf: pd.DataFrame):
         pdf = pdf.sort_values(["field", "term", "bucket", "block_id"], kind="stable")
-        self.last_doc = pdf["last_doc"].to_numpy(dtype=np.int64)
         self.n = pdf["n"].to_numpy(dtype=np.int64)
         self._doc_bytes = pdf["doc_bytes"].to_numpy()
         self._tf_bytes = pdf["tf_bytes"].to_numpy()
@@ -209,12 +209,6 @@ class PostingsStore:
                 self._rows[(str(fields[s]), key_term)] = (int(s), int(e))
         self._full_cache: dict[tuple[str, str], tuple[np.ndarray, np.ndarray, np.ndarray]] = {}
         self._pos_cache: dict[tuple[str, str], tuple] = {}
-
-    def keys(self):
-        return self._rows.keys()
-
-    def has(self, key: tuple[str, str]) -> bool:
-        return key in self._rows
 
     def decode(self, key: tuple[str, str]) -> tuple[np.ndarray, np.ndarray, np.ndarray] | None:
         """Decode ALL blocks of a term (cached)."""
@@ -850,17 +844,13 @@ def _sort_after_predicate(exprs, tiebreak: tuple[str, ...], after: tuple):
 
 def _rank_and_page(idx: np.ndarray, scores: np.ndarray, after, per_shard_amount: int):
     """Sort candidate docs by (score desc, doc_id asc), apply the
-    search-after cursor, and cut to per_shard_amount (+ sentinel)."""
+    search-after cursor, and cut to per_shard_amount."""
     if after is not None:
         a_score, a_doc = after
         keep = (scores < a_score) | ((scores == a_score) & (idx > a_doc))
         idx, scores = idx[keep], scores[keep]
-    order = np.lexsort((idx, -scores))
-    ranked, rscores = idx[order], scores[order]
-    top, tscores = ranked[:per_shard_amount], rscores[:per_shard_amount]
-    has_next = ranked.size > per_shard_amount
-    next_score = float(rscores[per_shard_amount]) if has_next else float("nan")
-    return top, tscores, has_next, next_score
+    order = np.lexsort((idx, -scores))[:per_shard_amount]
+    return idx[order], scores[order]
 
 
 def _apply_tombstones(match: np.ndarray, deleted) -> np.ndarray:
@@ -896,21 +886,13 @@ def _make_kernel(
     (KERNEL_SCHEMA) or, with ``full_match``, the one request's whole
     match set (MATCH_SCHEMA) — the input of facets and stats, which
     run doc-at-a-time over the match set in the reference
-    (AggregationHandler.java:256-281)."""
-    schema = MATCH_SCHEMA if full_match else KERNEL_SCHEMA
-    columns = [c.split()[0] for c in schema.split(", ")]
+    (AggregationHandler.java:256-281). Every shard with a kernel group
+    holds docs, so ``n_docs_by_shard`` has its size."""
 
     def kernel(key, pdf: pd.DataFrame, dv_pdf: pd.DataFrame | None) -> pd.DataFrame:
         shard = int(key[0])
         store = PostingsStore(pdf)
-        n = n_docs_by_shard.get(shard, 0)
-        if n == 0:
-            if store.blocks_total:
-                n = int(store.last_doc.max()) + 1
-            if dv_pdf is not None and len(dv_pdf):
-                n = max(n, int(dv_pdf["doc_id"].max()) + 1)
-            if n == 0:
-                return pd.DataFrame(columns=columns)
+        n = n_docs_by_shard[shard]
         deleted = (tombstones or {}).get(shard)
         dv = _dv_masks(dv_pdf, dv_sqls, n) if dv_pdf is not None else None
         frames = []
@@ -921,7 +903,7 @@ def _make_kernel(
                 return pd.DataFrame(
                     {"shard": np.int32(shard), "doc_id": idx.astype(np.int64), "score": total[idx]}
                 )
-            top, tscores, has_next, next_score = _rank_and_page(
+            top, tscores = _rank_and_page(
                 idx, total[idx], plan.after_by_shard.get(shard), plan.per_shard_amount
             )
             if top.size == 0:
@@ -935,8 +917,6 @@ def _make_kernel(
                         "doc_id": top.astype(np.int64),
                         "score": tscores,
                         "total_hits": np.int64(idx.size),
-                        "next_score": next_score,
-                        "has_next": has_next,
                     }
                 )
             )
@@ -1111,7 +1091,7 @@ class SearchEngine:
                 node.boost,
             )
         if isinstance(node, (_RRangeT, _RNumericSetT, _RGeoT)):
-            sql = self._range_predicate([(_MUST, node)])
+            sql = self._range_predicate(node)
             return RLeaf((DocValuesSpec(sql),), conj=False, boost=1.0)
         return node
 
@@ -1526,71 +1506,33 @@ class SearchEngine:
                 out.append({"label": req.search_label, "ok": False, "error": str(e)})
         return out
 
-    def search_many(
-        self, reqs: dict[str, SearchRequest], fetch: str = "ids", oversample: bool = False
-    ) -> dict[str, dict]:
+    def search_many(self, reqs: dict[str, SearchRequest], fetch: str = "ids") -> dict[str, dict]:
         """Execute many requests in ONE kernel action (module
-        docstring), doc-values-bearing requests included.
+        docstring), doc-values-bearing and purely negative requests
+        included. Each shard ranks a request's whole match set, so
+        every shard is asked for the full ``start + amount`` rows and
+        the merged page is exact without a retry."""
+        return self._search_resolved({qid: (r, self._resolve_request(r)) for qid, r in reqs.items()}, fetch)
 
-        ``oversample=True`` reproduces the reference's shard request
-        sizing: each shard is asked for only ``((k/numShards) +
-        minShardRequest) · requestFactor`` hits instead of the full k
-        (ZuliaIndex.getShardQuery:1021-1030, knobs
-        zulia_index.proto:39-41), with QueryCombiner-style
-        short-result detection — if a shard "has next" whose next
-        score could displace the merged page tail (beyond
-        shardTolerance), the affected queries are rerun exact
-        (QueryCombiner.java:146-382; fetchFull retry
-        QueryRequestFederator.java:95-105). Final results are
-        identical to the exact path; the oversampled first pass just
-        moves less data per shard."""
-        return self._search_resolved(
-            {qid: (r, self._resolve_request(r)) for qid, r in reqs.items()}, fetch, oversample
-        )
-
-    def _search_resolved(self, entries: dict, fetch: str = "ids", oversample: bool = False) -> dict[str, dict]:
+    def _search_resolved(self, entries: dict, fetch: str = "ids") -> dict[str, dict]:
         """:meth:`search_many` over requests already resolved:
         ``entries`` maps qid → (request, tree)."""
         shards = self._shards()
         reqs = {qid: e[0] for qid, e in entries.items()}
-        tree_by_qid = {qid: e[1] for qid, e in entries.items()}
-        # purely-negative queries take the MatchAll fix-up in the
-        # gather (driver-side page from shard_counts) — their kernel
-        # rows must never be undersized, so they are exempt from
-        # oversampling
-        neg_qids = {qid for qid, tree in tree_by_qid.items() if not tree_has_positive_leaf(tree)}
-
-        qplans: list[_QueryPlan] = []
-        k_by_qid: dict[str, int] = {}
-        for qid, req in reqs.items():
-            tree = tree_by_qid[qid]
-            after = {
-                s: a
-                for s in shards
-                if (a := (req.last_result.after_for(s) if req.last_result else None))
-            }
-            full = req.start + req.amount
-            k_shard = full
-            if oversample and len(shards) > 1 and qid not in neg_qids:
-                k_shard = min(
-                    full,
-                    int(
-                        np.ceil(
-                            (full / len(shards) + self.config.min_shard_request)
-                            * self.config.request_factor
-                        )
-                    ),
-                )
-            k_by_qid[qid] = k_shard
-            qplans.append(
-                _QueryPlan(
-                    qid=qid,
-                    tree=tree,
-                    per_shard_amount=k_shard,
-                    after_by_shard=after,
-                    sims=self._effective_sims(req, {f for f, _ in tree_stat_keys(tree)}),
-                )
+        qplans = [
+            _QueryPlan(
+                qid=qid,
+                tree=tree,
+                per_shard_amount=req.start + req.amount,
+                after_by_shard={
+                    s: a
+                    for s in shards
+                    if (a := (req.last_result.after_for(s) if req.last_result else None))
+                },
+                sims=self._effective_sims(req, {f for f, _ in tree_stat_keys(tree)}),
             )
+            for qid, (req, tree) in entries.items()
+        ]
 
         frame = self._kernel_frame(qplans)
         if frame is None:
@@ -1615,122 +1557,53 @@ class SearchEngine:
         )
         hits = hits.assign(rank=hits.groupby("qid").cumcount())
 
-        # purely-negative queries need the MatchAll fix-up (handled in
-        # the slow path below; neg_qids computed before planning);
-        # everything else takes the vectorized page cut — ONE pandas
-        # pass for the whole batch, no per-qid filtering of the big
-        # frame (that loop was O(queries × rows) and a constant ~1 s
-        # of driver time that throttled batch q/s)
+        # the page cut — ONE pandas pass for the whole batch, no
+        # per-qid filtering of the big frame (that loop was
+        # O(queries × rows) and a constant ~1 s of driver time that
+        # throttled batch q/s)
         start_map = {qid: r.start for qid, r in reqs.items()}
         lim_map = {qid: r.start + r.amount for qid, r in reqs.items()}
         qcol = hits["qid"]
         page = hits[
             (hits["rank"] >= qcol.map(start_map)) & (hits["rank"] < qcol.map(lim_map))
         ]
-        topk_by_qid: dict[str, list[dict]] = {qid: [] for qid in reqs}
+        results = {qid: {"totalHits": int(th_map.get(qid, 0)), "topk": []} for qid in reqs}
         for row in page.itertuples(index=False):
-            if row.qid not in neg_qids:
-                topk_by_qid[row.qid].append(
-                    {"shard": int(row.shard), "doc_id": int(row.doc_id), "score": float(row.score), "qid": row.qid}
-                )
-
-        results: dict[str, dict] = {}
-        all_topk: list[dict] = []
-        for qid, req in reqs.items():
-            total_hits = int(th_map.get(qid, 0))
-            if qid in neg_qids:
-                # MatchAll fix-up: shards where the negative terms have
-                # no postings produced no kernel group, yet ALL their
-                # docs match (ZuliaIndex.java:715-717)
-                sub = hits[hits["qid"] == qid] if len(hits) else hits
-                merged = list(
-                    zip(sub["score"].astype(float), sub["shard"].astype(int), sub["doc_id"].astype(int))
-                )
-                seen_shards = set(sub["shard"].astype(int)) | {
-                    int(s) for s in pdf[pdf["qid"] == qid]["shard"]
-                }
-                per_shard_amount = req.start + req.amount
-                for s, n_docs in self._shard_counts.items():
-                    if s in seen_shards or n_docs == 0:
-                        continue
-                    dead = self._tombstones.get(s, set())
-                    total_hits += n_docs - len(dead)
-                    # first per_shard_amount live doc ids, vectorized:
-                    # candidates = the page size + #deletes below it —
-                    # enough ids that at least per_shard_amount survive
-                    hi = min(n_docs, per_shard_amount + len(dead))
-                    cand = np.arange(hi, dtype=np.int64)
-                    if dead:
-                        dead_arr = np.fromiter(dead, dtype=np.int64)
-                        cand = cand[~np.isin(cand, dead_arr)]
-                    for d in cand[:per_shard_amount]:
-                        merged.append((0.0, s, int(d)))
-                merged.sort(key=lambda x: (-x[0], x[1], x[2]))
-                topk = [
-                    {"shard": s, "doc_id": d, "score": sc, "qid": qid}
-                    for sc, s, d in merged[req.start : req.start + req.amount]
-                ]
-            else:
-                topk = topk_by_qid[qid]
-            all_topk.extend(topk)
-            results[qid] = {"totalHits": total_hits, "topk": topk}
-
-        # short-result detection + exact retry (QueryCombiner.java:
-        # 146-382 compares each shard's "next" against the merged
-        # tail; QueryRequestFederator.java:95-105 re-federates with
-        # fetchFull). A query retries when a shard truncated at the
-        # oversampled k still had hits that could displace the page.
-        if oversample:
-            flags = pdf.drop_duplicates(["qid", "shard"])
-            short: list[str] = []
-            for qid, req in reqs.items():
-                if k_by_qid[qid] >= req.start + req.amount or qid in neg_qids:
-                    continue
-                f = flags[flags["qid"] == qid]
-                nxt = f.loc[f["has_next"].astype(bool), "next_score"].dropna()
-                if nxt.empty:
-                    continue
-                topk = results[qid]["topk"]
-                if len(topk) < req.amount or float(nxt.max()) >= (
-                    topk[-1]["score"] - self.config.shard_tolerance
-                ):
-                    short.append(qid)
-            if short:
-                outer_metrics = self.last_metrics
-                exact = self._search_resolved({q: entries[q] for q in short}, fetch="none")
-                self.last_metrics = outer_metrics
-                self.last_metrics["retried"] = len(short)
-                for q in short:
-                    results[q] = exact[q]
-                all_topk = [t for res in results.values() for t in res["topk"]]
+            results[row.qid]["topk"].append(
+                {"shard": int(row.shard), "doc_id": int(row.doc_id), "score": float(row.score)}
+            )
 
         self.last_metrics["gather_ms"] = int((_time.perf_counter() - _t_job) * 1000)
-        if fetch != "none" and all_topk:
+        if fetch != "none" and len(page):
             ids = self._id_column()
-            for t in all_topk:
-                t["uniqueId"] = ids[t["shard"]][t["doc_id"]]
-        for res in results.values():
-            for t in res["topk"]:
-                t.pop("qid", None)
+            for res in results.values():
+                for t in res["topk"]:
+                    t["uniqueId"] = ids[t["shard"]][t["doc_id"]]
         return results
 
     def _kernel_frame(self, plans: list[_QueryPlan], full_match: bool = False):
         """The one kernel action behind every search entry point, as a
-        lazy frame (None when no request reads postings or doc values).
+        lazy frame (None when no request can match anything: none
+        reads postings or doc values, and each has a positive leaf).
 
         The postings scan of the plans' terms is grouped by shard — a
         pinned index is already shard-partitioned, so that is no
-        shuffle. When some request has a doc-values leaf, the scan is
-        cogrouped by shard with ONE narrow doc_map frame: the rows
-        passing any leaf's predicate (the bare OR reaches the parquet
-        scan as PushedFilters), projected to (shard, doc_id, one
-        null-safe flag per leaf)."""
+        shuffle. When some request has a doc-values leaf or no positive
+        leaf, the scan is cogrouped by shard with ONE narrow doc_map
+        frame: the rows passing any leaf's predicate (the bare OR
+        reaches the parquet scan as PushedFilters) plus each shard's
+        doc 0, projected to (shard, doc_id, one null-safe flag per
+        leaf). Doc 0 gives every shard holding docs a kernel group, so
+        a pure negation matches all of a shard where its terms have no
+        postings (the reference's MatchAll fix-up,
+        ZuliaIndex.java:715-717, applied by ``evaluate_tree``)."""
         keys: set = set()
         dv_sqls: set[str] = set()
         for p in plans:
             keys |= tree_stat_keys(p.tree)
             dv_sqls.update(s.sql for s in _leaf_specs(p.tree) if isinstance(s, DocValuesSpec))
-        if not keys and not dv_sqls:
+        every_shard = bool(dv_sqls) or not all(tree_has_positive_leaf(p.tree) for p in plans)
+        if not keys and not every_shard:
             return None
         dv_sqls = tuple(sorted(dv_sqls))
         idf_by_key, avgdl_by_key, cond = self._plan(keys)
@@ -1740,7 +1613,7 @@ class SearchEngine:
         )
         scan = self._postings_scan(cond, any(_has_phrase(p.tree) for p in plans))
         schema = MATCH_SCHEMA if full_match else KERNEL_SCHEMA
-        if not dv_sqls:
+        if not every_shard:
             return scan.groupBy("shard").applyInPandas(
                 lambda key, pdf: kernel(key, pdf, None), schema
             )
@@ -1749,7 +1622,7 @@ class SearchEngine:
             for i, sql in enumerate(dv_sqls)
         ]
         dv = (
-            self.tables.doc_map.filter(" OR ".join(f"({sql})" for sql in dv_sqls))
+            self.tables.doc_map.filter(" OR ".join(f"({sql})" for sql in (*dv_sqls, "doc_id = 0")))
             .select("shard", "doc_id", *flags)
         )
         return scan.groupBy("shard").cogroup(dv.groupBy("shard")).applyInPandas(kernel, schema)
@@ -1777,11 +1650,11 @@ class SearchEngine:
         )
         return self.search(req)
 
-    def _range_predicate(self, ranges) -> str:
-        """(MUST, RRange / RNumericSet / RGeo) leaves → one SQL
-        predicate over doc_map columns, ANDed (numeric when the column
-        is numeric, else string compare). Field-mapping aliases OR
-        their expanded targets.
+    def _range_predicate(self, r) -> str:
+        """One RRange / RNumericSet / RGeo node → one SQL predicate
+        over doc_map columns (numeric when the column is numeric, else
+        string compare). Field-mapping aliases OR their expanded
+        targets.
 
         The predicate is BARE: WHERE treats NULL as false, and bare
         comparisons reach the parquet scan as PushedFilters
@@ -1792,24 +1665,19 @@ class SearchEngine:
         mask, and a doc WITHOUT the field is never flagged, so it is
         kept — Lucene MUST_NOT semantics."""
         dtypes = dict(self.tables.doc_map.dtypes)
-        parts = []
-        for occur, r in ranges:
-            if occur != _MUST:
-                raise ValueError(f"doc-values predicates compile MUST leaves only, got {occur}")
-            # lenient = pattern-expanded field list spanning types: a
-            # field the value can't parse for (or that isn't stored)
-            # matches nothing instead of failing the query
-            lenient = getattr(r, "lenient", False)
-            alts = []
-            for fld in r.fields:
-                try:
-                    alts.append(self._range_alt_sql(fld, r, dtypes))
-                except (ValueError, KeyError):
-                    if not lenient:
-                        raise
-                    alts.append("(1=0)")
-            parts.append("(" + " OR ".join(alts) + ")")
-        return " AND ".join(parts)
+        # lenient = pattern-expanded field list spanning types: a
+        # field the value can't parse for (or that isn't stored)
+        # matches nothing instead of failing the query
+        lenient = getattr(r, "lenient", False)
+        alts = []
+        for fld in r.fields:
+            try:
+                alts.append(self._range_alt_sql(fld, r, dtypes))
+            except (ValueError, KeyError):
+                if not lenient:
+                    raise
+                alts.append("(1=0)")
+        return "(" + " OR ".join(alts) + ")"
 
     def _range_alt_sql(self, fld: str, r, dtypes: dict) -> str:
         """One field's SQL alternative for a range/set/geo leaf.
@@ -1915,13 +1783,11 @@ class SearchEngine:
         doc-at-a-time facet/stat pass over the intersected iterators
         (AggregationHandler.java:256-281). It is the kernel action of
         :meth:`search` emitting the whole match set, so doc-values
-        leaves compose anywhere in the query. Requires at least one
-        positive clause (a purely-negative match-all set should be
-        computed as doc_map anti-join instead).
+        leaves compose anywhere in the query. A purely negative
+        request matches every live doc its negations leave, as in the
+        reference (ZuliaIndex.java:715-717).
         """
         tree = self._resolve_request(req)
-        if not tree_has_positive_leaf(tree):
-            raise ValueError("match_ids needs a positive clause; anti-join doc_map for pure negations")
         plan = _QueryPlan(
             qid="q",
             tree=tree,

@@ -43,6 +43,14 @@ TERMS_NOT = "TERMS_NOT"
 
 _POSITIVE = (SCORE_MUST, FILTER, TERMS)
 _NEGATIVE = (FILTER_NOT, TERMS_NOT)
+CLAUSE_TYPES = (SCORE_SHOULD, *_POSITIVE, *_NEGATIVE)
+
+
+def _check_default_op(default_op: str) -> None:
+    """AND or OR in any case (the reference's Operator enum); anything
+    else would silently combine as OR."""
+    if str(default_op).upper() not in ("AND", "OR"):
+        raise ValueError(f"default_op must be AND or OR, got {default_op!r}")
 
 
 @dataclass(frozen=True)
@@ -62,6 +70,12 @@ class QueryClause:
     # ("exact phrase"~N, ZuliaSyntaxParser.jj:171; needs positions)
     phrase: tuple[str, ...] = ()
     slop: int = 0  # proximity slop for the phrase
+
+    def __post_init__(self):
+        # an unknown type would silently run as a MUST clause
+        if self.type not in CLAUSE_TYPES:
+            raise ValueError(f"unknown clause type {self.type!r}; expected one of {', '.join(CLAUSE_TYPES)}")
+        _check_default_op(self.default_op)
 
     @property
     def negative(self) -> bool:
@@ -128,6 +142,9 @@ class SearchRequest:
     # REQUIRED unique key of a stored warming search
     # (CreateIndexRequestValidator.java:171-177)
     search_label: str = ""
+
+    def __post_init__(self):
+        _check_default_op(self.default_op)
 
 
 @dataclass(frozen=True)

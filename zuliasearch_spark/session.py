@@ -17,7 +17,11 @@ def get_spark(
     extra: dict[str, str] | None = None,
 ) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    master = master or f"local[{cpus}]"
+    # under spark-submit the launcher has started the JVM with its own
+    # --master (pyspark reads PYSPARK_GATEWAY_PORT to attach to it):
+    # keep that master unless the caller names one
+    if master is None and "PYSPARK_GATEWAY_PORT" not in os.environ:
+        master = f"local[{cpus}]"
     # shuffle/spill scratch: this sandbox's /tmp writes at ~16 MB/s,
     # which serializes every shuffle; tmpfs restores the NVMe-class
     # local-disk bandwidth a real executor would have
@@ -26,9 +30,9 @@ def get_spark(
     )
     if local_dir:
         os.makedirs(local_dir, exist_ok=True)
+    b = SparkSession.builder if master is None else SparkSession.builder.master(master)
     b = (
-        SparkSession.builder.master(master)
-        .appName(app)
+        b.appName(app)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or int(cpus) * 4))
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
