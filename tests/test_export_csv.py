@@ -52,8 +52,7 @@ def _doc_rows():
     ]
 
 
-@pytest.fixture(scope="module")
-def engine(spark):
+def _build(spark):
     cfg = IndexConfig(
         index_name="csvx",
         unique_id_col="uid",
@@ -68,9 +67,14 @@ def engine(spark):
         _doc_rows(),
         "uid string, title string, tags array<string>, n int, score_f double, kind string",
     )
-    tables = build_index(
+    return build_index(
         df, cfg, stored_cols=("title", "tags", "n", "score_f", "kind")
     ).persist()
+
+
+@pytest.fixture(scope="module")
+def engine(spark):
+    tables = _build(spark)
     yield SearchEngine(tables)
     tables.unpersist()
 
@@ -145,6 +149,19 @@ def test_query_csv_lines_distributed(engine):
     assert df.columns == ["line"]
     got = sorted(r["line"] for r in df.collect())
     assert got == [_EXPECTED["a"], _EXPECTED["c"]]
+
+
+def test_query_csv_lines_skips_deleted(spark):
+    # match_ids masks tombstones, so a deleted doc exports no line
+    tables = _build(spark)
+    try:
+        eng = SearchEngine(tables)
+        eng.delete_by_unique_ids(["c"])
+        df = query_csv_lines(eng, SearchRequest(qs="*:*"), _FIELDS)
+        got = sorted(r["line"] for r in df.collect())
+        assert got == [_EXPECTED[u] for u in ("a", "b", "d")]
+    finally:
+        tables.unpersist()
 
 
 def test_facet_csv(engine):

@@ -260,3 +260,52 @@ def test_shard_memory_budget_guard(spark):
         tables.vector_graphs.collect()
     ok = build_index(df, _cfg(hnsw_shard_budget_mb=64), stored_cols=("vec",))
     assert ok.vector_graphs.count() > 0
+
+
+def test_parquet_roundtrip_filtered_search_vector(spark, engines, tmp_path):
+    """Filtered VECTOR and VECTOR_SHOULD on the parquet-backed graph
+    (worker-side partition loader, cogrouped accept list) return the
+    in-memory engine's exact results: one kernel, two graph loaders."""
+    hnsw, _ = engines
+    out = str(tmp_path / "hnsw_f")
+    write_index(hnsw.tables, out)
+    eng2 = SearchEngine(read_index(spark, out, hnsw.config))
+    tags = tuple(f"tag{c}" for c in range(6))  # broader than the beam
+    reqs = (
+        SearchRequest((QueryClause("FILTER", q="tag:tag2"),)),
+        SearchRequest((QueryClause("TERMS", terms=tags, qf=("tag",)),)),
+        SearchRequest(
+            (
+                QueryClause("SCORE_SHOULD", q="tag:tag4"),
+                QueryClause("TERMS", terms=tags, qf=("tag",)),
+            )
+        ),
+    )
+
+    def key(res):
+        return res["totalHits"], [
+            (t["uniqueId"], t["shard"], t["doc_id"], t["score"]) for t in res["topk"]
+        ]
+
+    qv = _queries()[4]
+    for req in reqs:
+        for should in (False, True):
+            a = hnsw.search_vector(req, qv, "vec", k=5, should=should, amount=8)
+            b = eng2.search_vector(req, qv, "vec", k=5, should=should, amount=8)
+            assert key(a) == key(b)
+            assert a["topk"]
+
+
+def test_empty_vector_should_counts_live_docs(spark):
+    """VECTOR_SHOULD with no clauses keeps every LIVE doc matched: a
+    tombstoned doc is neither counted nor ranked."""
+    df = spark.createDataFrame(pd.DataFrame(_rows(), columns=["uid", "tag", "vec"]))
+    eng = SearchEngine(build_index(df, _cfg(), stored_cols=("vec",)).persist())
+    qv = _queries()[3]
+    before = eng.search_vector(SearchRequest(), qv, "vec", k=5, should=True, amount=5)
+    gone = before["topk"][0]["uniqueId"]
+    eng.delete_by_unique_ids([gone])
+    res = eng.search_vector(SearchRequest(), qv, "vec", k=5, should=True, amount=5)
+    assert res["totalHits"] == N - 1
+    assert gone not in [t["uniqueId"] for t in res["topk"]]
+    assert len(res["topk"]) == 5

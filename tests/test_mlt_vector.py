@@ -180,6 +180,27 @@ def test_document_id_lexical_source_excluded(engine, rows):
     assert "d0003" not in _uids(res)
 
 
+def test_lexical_source_excluded_below_page(engine, rows):
+    """A source doc that matches but ranks below the page is still
+    excluded from totalHits: the exclusion is a MUST_NOT on the
+    source ids in the query, not a cut of the returned page."""
+    tf = {uid: text.split().count("parse") for uid, text, _ in rows}
+    # one "parse" among 12 words: many docs hold more and outrank it
+    src = next(u for u, c in tf.items() if c == 1)
+    kw = dict(
+        fields=("text",), like_texts=("parse " * 30,), document_ids=(src,),
+        min_term_freq=1, min_doc_freq=1, max_doc_freq_pct=100, max_query_terms=1,
+    )
+    kept = engine.more_like_this(**kw, amount=N_DOCS, include_source_docs=True)
+    assert kept["terms"] == ["parse"]
+    n_match = sum(1 for c in tf.values() if c > 0)
+    assert kept["totalHits"] == n_match
+    assert _uids(kept).index(src) >= 2  # below amount + len(document_ids)
+    res = engine.more_like_this(**kw, amount=1)
+    assert res["totalHits"] == n_match - 1
+    assert src not in _uids(res) and len(res["topk"]) == 1
+
+
 def test_missing_source_doc_raises(engine):
     with pytest.raises(ValueError, match="not found"):
         engine.more_like_this(vector_field="emb", document_ids=("nope",), amount=5)

@@ -156,7 +156,8 @@ def query_csv_lines(engine, req, fields) -> DataFrame:
     — the scale path: ``query_csv_lines(...).write.text(out)`` is a
     distributed export; no cursor loop, no driver materialization."""
     matches = engine.match_ids(req).select("shard", "doc_id")
-    docs = matches.join(engine._live_doc_map(), ["shard", "doc_id"])
+    # match_ids already drops tombstoned docs
+    docs = matches.join(engine.tables.doc_map, ["shard", "doc_id"])
     return docs.select(csv_line_expr(docs.schema, fields))
 
 

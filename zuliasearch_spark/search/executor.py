@@ -154,13 +154,18 @@ def _resolved_clause_to_tree(rc: ResolvedClause) -> RBool | RLeaf:
     return RBool(tuple(children), mm=rc.min_optional, boost=1.0)
 
 
-def _knn_pdf(shard: int, rows) -> pd.DataFrame:
-    """(shard, doc_id, uniqueId, cosine) frame for one shard's KNN
-    kernel output (rows = hnsw.shard_topk result)."""
-    return pd.DataFrame(
+def _knn_pdf(shard: int, rows, scores) -> pd.DataFrame:
+    """(shard, doc_id, uniqueId, cosine, score) frame for one shard's
+    KNN kernel output (rows = hnsw.shard_topk result; ``scores`` the
+    rows' pre-filter match scores, or one scalar)."""
+    if not rows:
+        return _empty_knn_pdf()
+    pdf = pd.DataFrame(
         [(shard, d, u, c) for d, u, c in rows],
         columns=["shard", "doc_id", "uniqueId", "cosine"],
     )
+    pdf["score"] = scores
+    return pdf
 
 
 def _empty_knn_pdf() -> pd.DataFrame:
@@ -170,8 +175,71 @@ def _empty_knn_pdf() -> pd.DataFrame:
             "doc_id": pd.Series([], dtype="int64"),
             "uniqueId": pd.Series([], dtype="object"),
             "cosine": pd.Series([], dtype="float64"),
+            "score": pd.Series([], dtype="float64"),
         }
     )
+
+
+def _knn_dicts(rows) -> list[dict]:
+    """Collected KNN rows → the ranker's [{shard, doc_id, uniqueId,
+    cosine, score}]."""
+    return [
+        {
+            "shard": int(r["shard"]),
+            "doc_id": int(r["doc_id"]),
+            "uniqueId": r["uniqueId"],
+            "cosine": float(r["cosine"]),
+            "score": float(r["score"]),
+        }
+        for r in rows
+    ]
+
+
+def _ddsketch_quantiles(buckets, gamma: float, percentiles) -> tuple[int, list]:
+    """Quantiles of one merged DDSketch given as (sign, bucket, count)
+    rows (sign None = a doc without a value: counted nowhere). Returns
+    (value count, [value at each percentile, None when empty]). The
+    walk follows the sketch's value order: the negative store
+    descending by bucket (most-negative value first), zeros, then the
+    positive store ascending; quantile q is the first bucket whose
+    cumulative count exceeds rank q*(n-1), read at its midpoint
+    ±2*gamma^i/(gamma+1)."""
+    neg = sorted(((b, c) for s, b, c in buckets if s == -1), reverse=True)
+    zero = sum(c for s, _, c in buckets if s == 0)
+    pos = sorted((b, c) for s, b, c in buckets if s == 1)
+    n = sum(c for _, c in neg) + zero + sum(c for _, c in pos)
+    out = []
+    for p in percentiles:
+        if n == 0:
+            out.append(None)
+            continue
+        rank = p * (n - 1)
+        cum = 0
+        val = None
+        for b, c in neg:
+            cum += c
+            if cum > rank:
+                val = -2.0 * gamma**b / (gamma + 1.0)
+                break
+        if val is None:
+            cum += zero
+            if cum > rank:
+                val = 0.0
+        if val is None:
+            for b, c in pos:
+                cum += c
+                if cum > rank:
+                    val = 2.0 * gamma**b / (gamma + 1.0)
+                    break
+        out.append(float(val))
+    return n, out
+
+
+# the postings columns PostingsStore reads (pos_bytes aside): the
+# pinned copy and every kernel scan carry these and no others
+_KERNEL_COLUMNS = (
+    "field", "shard", "bucket", "term", "block_id", "n", "doc_bytes", "tf_bytes", "dl_bytes",
+)
 
 
 class PostingsStore:
@@ -1215,7 +1283,7 @@ class SearchEngine:
             cond = c if cond is None else (cond | c)
         return cond
 
-    def pin(self, need_positions: bool = False) -> "SearchEngine":
+    def pin(self) -> "SearchEngine":
         """Pin the postings RESIDENT in executor memory, hash-
         partitioned by shard — the steady-state serving topology —
         and load the driver-side uniqueId column (:meth:`_id_column`).
@@ -1235,10 +1303,11 @@ class SearchEngine:
         to them with NO data movement; scaling out adds partitions
         without touching the plan.
 
-        ``need_positions=False`` (default) drops the pos_bytes stream
-        from the resident copy — the largest per-posting payload,
-        read only by phrase/interval queries, which transparently
-        fall back to the parquet scan path.
+        The resident copy holds only the columns the kernel reads
+        (:data:`_KERNEL_COLUMNS`). It drops the pos_bytes stream — the
+        largest per-posting payload, read only by phrase/interval
+        queries, which transparently fall back to the parquet scan
+        path — and each block's first/last doc and tf/dl sums.
 
         Pinned, a postings-class ``search()`` or ``search_many()`` is
         ONE Spark job (the kernel); a request naming a term the engine
@@ -1248,9 +1317,7 @@ class SearchEngine:
         hits come from the driver-side id column, which costs about one
         Python string per indexed doc of driver memory."""
         self.unpin()  # re-pinning must release the previous resident copy
-        base = self.tables.postings
-        if not need_positions and "pos_bytes" in base.columns:
-            base = base.select(*[c for c in base.columns if c != "pos_bytes"])
+        base = self.tables.postings.select(*_KERNEL_COLUMNS)
         # sortWithinPartitions clusters the cached batches by term so
         # the in-memory columnar cache's per-batch min/max stats prune
         # query filters like the parquet scan prunes row groups —
@@ -1312,22 +1379,21 @@ class SearchEngine:
         return self._ids
 
     def _postings_scan(self, cond, need_positions: bool):
-        """Pruned postings scan for a query batch. The positions
-        stream is the largest per-posting payload and only phrase
-        queries read it — term-only batches PROJECT it out so the
-        parquet scan and the per-shard shuffle never carry it
-        (column pruning reaches the scan: ReadSchema drops
-        pos_bytes). When the index is pinned (:meth:`pin`), term-only
-        batches filter the resident shard-partitioned cache instead —
-        no parquet scan and no shuffle."""
-        if self._pinned is not None and (
-            need_positions is False or "pos_bytes" in self._pinned.columns
-        ):
+        """Pruned postings scan for a query batch, PROJECTED to the
+        columns :class:`PostingsStore` reads, so the parquet scan and
+        the per-shard shuffle carry nothing else (column pruning
+        reaches the scan's ReadSchema). The positions stream is the
+        largest per-posting payload and only phrase queries read it;
+        term-only batches leave it out. When the index is pinned
+        (:meth:`pin`), term-only batches filter the resident
+        shard-partitioned cache instead — no parquet scan and no
+        shuffle."""
+        if self._pinned is not None and not need_positions:
             return self._pinned.filter(cond)
-        scan = self.tables.postings.filter(cond)
-        if not need_positions and "pos_bytes" in scan.columns:
-            scan = scan.select(*[c for c in scan.columns if c != "pos_bytes"])
-        return scan
+        cols = _KERNEL_COLUMNS
+        if need_positions and "pos_bytes" in self.tables.postings.columns:
+            cols = (*cols, "pos_bytes")
+        return self.tables.postings.filter(cond).select(*cols)
 
     def _shards(self) -> list[int]:
         return sorted(self._shard_counts)
@@ -2456,150 +2522,84 @@ class SearchEngine:
     ) -> dict:
         """VECTOR / VECTOR_SHOULD clause composed with the boolean
         query (handleVectorQuery, ZuliaIndex.java:566-615): the
-        request's clauses act as the KNN pre-filter (:693-695 injects
-        MatchAll when they are all absent), cosine similarity is
-        computed against a stored embedding column on doc_map, and:
+        request's match set is the KNN pre-filter of the one KNN
+        ranker (:meth:`_knn_top_rows`), and:
 
         - ``should=False`` (VECTOR): only the top-k docs by cosine
           remain matched; each scores bm25 + cosine;
         - ``should=True`` (VECTOR_SHOULD): matching is unchanged; the
-          top-k docs get the cosine added to their score.
+          k ranked rows are collected and broadcast-joined onto the
+          match set, adding their cosine to its scores.
 
-        The dot product runs as codegen array expressions over the
-        pre-filtered match set — the scan never ranks vectors the
-        boolean query already excluded.
+        A request with no clauses and no query string has no
+        pre-filter (the reference injects MatchAll, :693-695): the
+        ranker takes every live doc, and :meth:`match_ids` answers the
+        empty request with every live doc.
         """
         amount = amount or k
         _require_nonzero_query_vector(vector)
-        if req.clauses or req.qs is not None:
-            matches = self.match_ids(req)
-        else:
-            # injected MatchAll = all LIVE docs (liveDocs semantics)
-            matches = self._live_doc_map().select(
-                "shard", "doc_id", F.lit(0.0).alias("score")
-            )
-        j = matches.join(self.tables.doc_map, ["shard", "doc_id"])
-        vf = self.config.vector_field(vector_field)
-        vcol = vf[0] if vf is not None else vector_field
-        qlit = F.array(*[F.lit(float(x)) for x in vector])
-        emb = F.col(vcol)
-
-        def dot(a, b):
-            return F.aggregate(
-                F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-                F.lit(0.0),
-                lambda acc, x: acc + x,
-            )
-
-        # nullif guard: legacy tables built before the zero-vector
-        # ingest guard can hold zero rows — they rank NULL (sorted
-        # last) instead of raising an ANSI divide-by-zero
-        cos = dot(emb, qlit) / F.nullif(
-            F.sqrt(dot(emb, emb)) * F.sqrt(dot(qlit, qlit)), F.lit(0.0)
+        matches = self.match_ids(req)
+        filtered = bool(req.clauses) or req.qs is not None
+        knn = self._knn_top_rows(
+            vector, vector_field, k, allowed=matches if filtered else None
         )
-        pool = j.filter(emb.isNotNull())
-        if vf is not None and vf[1].index_type == "IVF":
-            # IVF cell probe FIRST: the boolean pre-filter and the
-            # cell filter compose as one conjunctive scan predicate
-            pool = self._ivf_probe_filter(pool, vf[1], vector, k)
-        if vf is not None and vf[1].encoding != "FLOAT32":
-            # quantized first pass over the pre-filtered pool, exact
-            # cosine rescore below (oversample+rescore, VectorConfig)
-            pool = self._quantized_candidates(pool, vcol, vf[1], vector, k)
-        scored = pool.select(
-            "shard", "doc_id", "score", "uniqueId", F.round(cos, 6).alias("cosine")
+        if not should:
+            out = [
+                {
+                    "shard": r["shard"],
+                    "doc_id": r["doc_id"],
+                    "uniqueId": r["uniqueId"],
+                    "score": r["score"] + r["cosine"],
+                }
+                for r in knn
+            ]
+            out.sort(key=lambda t: (-t["score"], t["shard"], t["doc_id"]))
+            return {"totalHits": len(out), "topk": out[:amount]}
+        # SHOULD-occur KNN (ZuliaIndex.java:802-805 composes the knn
+        # query as a BooleanClause.Occur.SHOULD inside one Lucene
+        # query): the merged ranking is ordered + limited IN-PLAN — no
+        # driver-side collect of the match set, so a broad boolean
+        # pre-filter stays distributed (TakeOrderedAndProject does the
+        # global top-amount). Two actions read it (totalHits, the
+        # page), so the narrow 4-column frame is persisted once rather
+        # than running the kernel per action.
+        knn_df = self.tables.doc_map.sparkSession.createDataFrame(
+            [(r["shard"], r["doc_id"], r["cosine"]) for r in knn],
+            "shard int, doc_id long, _knn double",
         )
-        top = scored.orderBy(F.desc("cosine"), F.asc("shard"), F.asc("doc_id")).limit(k)
-        if (
-            vf is not None
-            and vf[1].index_type == "HNSW"
-            and self.tables.vector_graphs is not None
-        ):
-            spark = self.tables.doc_map.sparkSession
-            if not req.clauses and req.qs is None:
-                # un-pre-filtered KNN (the injected MatchAll) serves
-                # from the per-shard HNSW graphs instead of scanning
-                # (ZuliaIndex.buildKnnQuery:597-615)
-                knn_rows = self._hnsw_top_rows(vector, vector_field, k)
-                top = spark.createDataFrame(
-                    [
-                        (r["shard"], r["doc_id"], 0.0, r["uniqueId"], r["cosine"])
-                        for r in knn_rows
-                    ],
-                    "shard int, doc_id long, score double, uniqueId string, cosine double",
-                )
-            else:
-                # filtered KNN: the boolean match set rides along as a
-                # cogrouped per-shard accept list (Lucene's filter
-                # bitset, AbstractKnnVectorQuery); hnsw.shard_topk
-                # applies the cost rule — exact scan for small
-                # filters, graph traversal under a |filter| visited
-                # budget with exact fallback otherwise — so neither a
-                # needle filter nor a match-almost-everything filter
-                # degrades to an O(corpus) scan
-                knn_rows = self._hnsw_top_rows(
-                    vector, vector_field, k, allowed=matches
-                )
-                tk = spark.createDataFrame(
-                    [
-                        (r["shard"], r["doc_id"], r["uniqueId"], r["cosine"])
-                        for r in knn_rows
-                    ],
-                    "shard int, doc_id long, uniqueId string, cosine double",
-                )
-                top = matches.join(F.broadcast(tk), ["shard", "doc_id"]).select(
-                    "shard", "doc_id", "score", "uniqueId", "cosine"
-                )
-        if should:
-            # SHOULD-occur KNN (ZuliaIndex.java:802-805 composes the knn
-            # query as a BooleanClause.Occur.SHOULD inside one Lucene
-            # query): the k-row top frame is broadcast-joined onto the
-            # match set and the merged ranking is ordered + limited
-            # IN-PLAN — no driver-side collect of the match set, so a
-            # broad boolean pre-filter at 100x stays distributed
-            # (TakeOrderedAndProject does the global top-amount).
-            base = matches.select("shard", "doc_id", "score").join(
+        merged = (
+            matches.join(
                 self.tables.doc_map.select("shard", "doc_id", "uniqueId"),
                 ["shard", "doc_id"],
             )
-            merged = base.join(
-                F.broadcast(top.select("shard", "doc_id", F.col("cosine").alias("_knn"))),
-                ["shard", "doc_id"],
-                "left",
-            ).select(
+            .join(F.broadcast(knn_df), ["shard", "doc_id"], "left")
+            .select(
                 "shard",
                 "doc_id",
                 "uniqueId",
                 (F.col("score") + F.coalesce(F.col("_knn"), F.lit(0.0))).alias("score"),
             )
+            .persist()
+        )
+        try:
             total = merged.count()
             rows = (
                 merged.orderBy(F.desc("score"), F.asc("shard"), F.asc("doc_id"))
                 .limit(amount)
                 .collect()
             )
-            out = [
-                {
-                    "shard": int(r["shard"]),
-                    "doc_id": int(r["doc_id"]),
-                    "uniqueId": r["uniqueId"],
-                    "score": float(r["score"]),
-                }
-                for r in rows
-            ]
-            return {"totalHits": total, "topk": out}
-        rows = top.collect()
+        finally:
+            merged.unpersist()
         out = [
             {
                 "shard": int(r["shard"]),
                 "doc_id": int(r["doc_id"]),
                 "uniqueId": r["uniqueId"],
-                "score": float(r["score"]) + float(r["cosine"]),
+                "score": float(r["score"]),
             }
             for r in rows
         ]
-        out.sort(key=lambda t: (-t["score"], t["shard"], t["doc_id"]))
-        return {"totalHits": len(out), "topk": out[:amount]}
+        return {"totalHits": total, "topk": out}
 
     def _sort_key_expr(self, col: str):
         """Resolve a sort field name to its column expression,
@@ -2938,38 +2938,10 @@ class SearchEngine:
             .count()
             .collect()
         )
-        # walk order mirrors the sketch's value order: negative store
-        # descending by bucket (most-negative value first), zeros, then
-        # the positive store ascending.
-        neg = sorted(((r["bucket"], r["count"]) for r in rows if r["sign"] == -1), reverse=True)
-        zero = sum(r["count"] for r in rows if r["sign"] == 0)
-        pos = sorted((r["bucket"], r["count"]) for r in rows if r["sign"] == 1)
-        n = sum(c for _, c in neg) + zero + sum(c for _, c in pos)
-        out = {}
-        for p in percentiles:
-            name = f"p{int(p * 100)}"
-            if n == 0:
-                out[name] = None
-                continue
-            rank = p * (n - 1)
-            cum = 0
-            val = None
-            for b, c in neg:
-                cum += c
-                if cum > rank:
-                    val = -2.0 * gamma**b / (gamma + 1.0)
-                    break
-            if val is None:
-                cum += zero
-                if cum > rank:
-                    val = 0.0
-            if val is None:
-                for b, c in pos:
-                    cum += c
-                    if cum > rank:
-                        val = 2.0 * gamma**b / (gamma + 1.0)
-                        break
-            out[name] = float(val)
+        _, vals = _ddsketch_quantiles(
+            [(r["sign"], r["bucket"], r["count"]) for r in rows], gamma, percentiles
+        )
+        out = {f"p{int(p * 100)}": v for p, v in zip(percentiles, vals)}
         spark = self.tables.doc_map.sparkSession
         schema = ", ".join(f"{k} double" for k in out)
         return spark.createDataFrame([Row(**out)], schema=schema)
@@ -3036,36 +3008,8 @@ class SearchEngine:
             )
         out_rows = []
         for facet, ent in by_facet.items():
-            neg = sorted(((b, c) for s, b, c in ent if s == -1), reverse=True)
-            zero = sum(c for s, _, c in ent if s == 0)
-            pos = sorted((b, c) for s, b, c in ent if s == 1)
-            n = sum(c for _, c in neg) + zero + sum(c for _, c in pos)
-            all_docs = sum(c for _, _, c in ent)
-            vals = [facet, n, all_docs]
-            for p in percentiles:
-                if n == 0:
-                    vals.append(None)
-                    continue
-                rank = p * (n - 1)
-                cum = 0
-                val = None
-                for b, c in neg:
-                    cum += c
-                    if cum > rank:
-                        val = -2.0 * gamma**b / (gamma + 1.0)
-                        break
-                if val is None:
-                    cum += zero
-                    if cum > rank:
-                        val = 0.0
-                if val is None:
-                    for b, c in pos:
-                        cum += c
-                        if cum > rank:
-                            val = 2.0 * gamma**b / (gamma + 1.0)
-                            break
-                vals.append(float(val))
-            out_rows.append(tuple(vals))
+            n, vals = _ddsketch_quantiles(ent, gamma, percentiles)
+            out_rows.append((facet, n, sum(c for _, _, c in ent), *vals))
         out_rows.sort(key=lambda t: (-t[1], t[0]))
         cut = self._facet_top_n(top_n)
         if cut is not None:
@@ -3542,14 +3486,23 @@ class SearchEngine:
                 return col
         return indexed_field
 
-    def _knn_top_rows(self, vector, vector_field: str, k: int) -> list[dict]:
-        """Global KNN: top-k docs by cosine against a stored vector
-        column (KnnFloatVectorQuery over the whole index). The cosine
-        runs as codegen array expressions in-plan; only the k result
-        rows reach the driver. Returns [{shard, doc_id, uniqueId,
-        cosine}] sorted by cosine desc, (shard, doc_id) asc on ties.
-        HNSW-configured fields serve from the per-shard graph
-        (_hnsw_top_rows) instead of scanning."""
+    def _knn_top_rows(self, vector, vector_field: str, k: int, allowed=None) -> list[dict]:
+        """The one KNN ranker: top-k docs by cosine against a stored
+        vector column (KnnFloatVectorQuery). ``allowed`` is the
+        boolean pre-filter's match frame (shard, doc_id, score), the
+        query's filter as in ZuliaIndex.handleVectorQuery:566-615; None
+        ranks every live doc (the injected MatchAll).
+
+        The scan pool is ``allowed`` joined to doc_map, or the live
+        doc_map. IVF fields probe their nearest cells and quantized
+        encodings oversample before the exact rescore, over either
+        pool. The cosine runs as codegen array expressions in-plan;
+        only the k result rows reach the driver. HNSW-configured
+        fields serve from the per-shard graphs (_hnsw_top_rows)
+        instead of scanning. Returns [{shard, doc_id, uniqueId,
+        cosine, score}] sorted by cosine desc, (shard, doc_id) asc on
+        ties; ``score`` is the row's match score (0.0 without a
+        filter)."""
         _require_nonzero_query_vector(vector)
         vf = self.config.vector_field(vector_field)
         if (
@@ -3557,7 +3510,7 @@ class SearchEngine:
             and vf[1].index_type == "HNSW"
             and self.tables.vector_graphs is not None
         ):
-            return self._hnsw_top_rows(vector, vector_field, k)
+            return self._hnsw_top_rows(vector, vector_field, k, allowed)
         col = vf[0] if vf is not None else vector_field
         qlit = F.array(*[F.lit(float(x)) for x in vector])
         emb = F.col(col)
@@ -3575,9 +3528,13 @@ class SearchEngine:
         cos = dot(emb, qlit) / F.nullif(
             F.sqrt(dot(emb, emb)) * F.sqrt(dot(qlit, qlit)), F.lit(0.0)
         )
-        # LIVE docs only: Lucene KNN consults liveDocs, so deleted
-        # docs neither surface nor consume top-k slots
-        base = self._live_doc_map().filter(emb.isNotNull())
+        if allowed is None:
+            # LIVE docs only: Lucene KNN consults liveDocs, so deleted
+            # docs neither surface nor consume top-k slots
+            base = self._live_doc_map().withColumn("score", F.lit(0.0))
+        else:
+            base = allowed.join(self.tables.doc_map, ["shard", "doc_id"])
+        base = base.filter(emb.isNotNull())
         vc = vf[1] if vf is not None else None
         if vc is not None and vc.index_type == "IVF":
             base = self._ivf_probe_filter(base, vc, vector, k)
@@ -3585,61 +3542,55 @@ class SearchEngine:
             base = self._quantized_candidates(base, col, vc, vector, k)
         rows = (
             base.select(
-                "shard", "doc_id", "uniqueId", F.round(cos, 6).alias("cosine")
+                "shard", "doc_id", "uniqueId", F.round(cos, 6).alias("cosine"), "score"
             )
             .orderBy(F.desc("cosine"), F.asc("shard"), F.asc("doc_id"))
             .limit(k)
             .collect()
         )
-        return [
-            {
-                "shard": int(r["shard"]),
-                "doc_id": int(r["doc_id"]),
-                "uniqueId": r["uniqueId"],
-                "cosine": float(r["cosine"]),
-            }
-            for r in rows
-        ]
+        return _knn_dicts(rows)
 
     def _hnsw_top_rows(
         self, vector, vector_field: str, k: int, allowed=None
     ) -> list[dict]:
-        """Global KNN served from the per-shard HNSW graphs
-        (VectorConfig index_type="HNSW"; the reference's
-        ZuliaIndex.buildKnnQuery:597-615 over Lucene's per-segment
-        graph). One grouped-pandas job traverses every shard's graph
-        concurrently — beam max(efSearch, k) per shard, Lucene's
-        per-leaf KNN then a top-k merge — and only shards × k
+        """:meth:`_knn_top_rows` for an HNSW field, served from the
+        per-shard graphs (VectorConfig index_type="HNSW"; the
+        reference's ZuliaIndex.buildKnnQuery:597-615 over Lucene's
+        per-segment graph). One grouped-pandas job traverses every
+        shard's graph concurrently — beam max(efSearch, k) per shard,
+        Lucene's per-leaf KNN then a top-k merge — and only shards × k
         candidate rows leave the kernels; the global cut is a
         TakeOrderedAndProject over those.
 
-        Serving shape: when the index is parquet-backed the job's
-        input is a one-row-per-shard SKELETON and each task loads its
-        own ``vector_graphs/field=…/shard=…`` partition worker-side
+        One kernel serves every call; only its graph loader differs.
+        When the index is parquet-backed the job's input is a
+        one-row-per-shard SKELETON and each task loads its own
+        ``vector_graphs/field=…/shard=…`` partition worker-side
         (pyarrow), cached across queries keyed by the partition's
         mtime — a query stream pays graph decode once per (worker,
         shard), like Lucene holding the graph reader open. In-memory
-        indexes fall back to shipping the grouped graph rows through
-        Arrow each query (decode still cached by graph_id).
+        indexes ship the grouped graph rows through Arrow each query
+        (decode still cached by graph_id).
 
         liveDocs parity: tombstoned docs route during traversal but
         are never collected, and the beam widens by the shard's dead
         count (hnsw.shard_topk) so deletes cannot starve k.
 
-        Filtered KNN: ``allowed`` is the boolean pre-filter's match
-        set as a DataFrame of (shard, doc_id). It is COGROUPED with
-        the per-shard traversal — each task receives its own shard's
-        accept list as an Arrow batch (the distributed analogue of
-        Lucene handing the filter bitset to the per-leaf searcher;
-        AbstractKnnVectorQuery), so the filter never collects to the
-        driver no matter how broad it is. Inside the kernel
+        Filtered KNN: ``allowed`` (the pre-filter's match frame) is
+        COGROUPED with the graph — each task receives its own shard's
+        accept list and match scores as an Arrow batch (the
+        distributed analogue of Lucene handing the filter bitset to
+        the per-leaf searcher; AbstractKnnVectorQuery), so the filter
+        never collects to the driver no matter how broad it is, and
+        each collected row carries its match score. Inside the kernel
         hnsw.shard_topk applies Lucene's cost rule: small filters
         scan exactly; larger ones traverse the graph under a visited
-        budget of |allowed| with exact fallback."""
+        budget of |allowed| with exact fallback. Unfiltered calls
+        pass no accept list, as :meth:`_kernel_frame` passes no
+        doc-values frame."""
         import os as _os
 
-        vf = self.config.vector_field(vector_field)
-        col, vc = vf
+        vc = self.config.vector_field(vector_field)[1]
         name = vc.indexed_field_name
         graphs = self.tables.vector_graphs
         if graphs is None:
@@ -3647,11 +3598,9 @@ class SearchEngine:
                 f"vector field {name!r} is configured index_type='HNSW' but the "
                 f"index has no graph table — rebuild with this config"
             )
-        spark = graphs.sparkSession
         ef = max(vc.hnsw_ef_search, k)
         dead = {s: sorted(ids) for s, ids in self._tombstones.items() if ids}
         q = [float(x) for x in vector]
-        out_schema = "shard int, doc_id long, uniqueId string, cosine double"
         root = getattr(self.tables, "root_path", None)
         gdir = _os.path.join(root, "vector_graphs", f"field={name}") if root else None
         if gdir is not None and _os.path.isdir(gdir):
@@ -3663,140 +3612,68 @@ class SearchEngine:
                     if d.startswith("shard=")
                 )
                 self._hnsw_shards[name] = shards
-            probe = spark.createDataFrame([(s,) for s in shards], "shard int")
+            graph = graphs.sparkSession.createDataFrame([(s,) for s in shards], "shard int")
 
-            def make_kernel(gdir=gdir, q=q, ef=ef, k=k, dead=dead):
-                def kernel(key, pdf):
-                    import os
+            def load(shard, pdf):
+                import os
 
-                    import pandas as pd
+                from zuliasearch_spark.indexing.hnsw import decode_graph_parquet
 
-                    from zuliasearch_spark.indexing.hnsw import (
-                        decode_graph_parquet,
-                        shard_topk,
-                    )
+                part = os.path.join(gdir, f"shard={shard}")
+                return decode_graph_parquet(part, cache_key=(part, os.path.getmtime(part)))
 
-                    shard = int(key[0])
-                    part = os.path.join(gdir, f"shard={shard}")
-                    decoded = decode_graph_parquet(
-                        part, cache_key=(part, os.path.getmtime(part))
-                    )
-                    rows = shard_topk(decoded, q, ef, k, dead_ids=dead.get(shard))
-                    return pd.DataFrame(
-                        [(shard, d, u, c) for d, u, c in rows],
-                        columns=["shard", "doc_id", "uniqueId", "cosine"],
-                    )
-
-                return kernel
-
-            if allowed is None:
-                cand = probe.groupBy("shard").applyInPandas(make_kernel(), out_schema)
-            else:
-
-                def make_cokernel(gdir=gdir, q=q, ef=ef, k=k, dead=dead):
-                    def kernel(key, left, right):
-                        import os
-
-                        from zuliasearch_spark.indexing.hnsw import (
-                            decode_graph_parquet,
-                            shard_topk,
-                        )
-
-                        shard = int(key[0])
-                        if left.empty or right.empty:
-                            return _empty_knn_pdf()
-                        part = os.path.join(gdir, f"shard={shard}")
-                        decoded = decode_graph_parquet(
-                            part, cache_key=(part, os.path.getmtime(part))
-                        )
-                        rows = shard_topk(
-                            decoded, q, ef, k,
-                            dead_ids=dead.get(shard),
-                            allowed_ids=right["doc_id"].to_numpy(),
-                        )
-                        return _knn_pdf(shard, rows)
-
-                    return kernel
-
-                cand = (
-                    probe.groupBy("shard")
-                    .cogroup(allowed.select("shard", "doc_id").groupBy("shard"))
-                    .applyInPandas(make_cokernel(), out_schema)
-                )
         else:
-            frame = self._hnsw_frames.get(name)
-            if frame is None:
-                frame = (
+            graph = self._hnsw_frames.get(name)
+            if graph is None:
+                graph = (
                     graphs.filter(F.col("field") == name)
                     .repartition("shard")
                     .persist()
                 )
-                self._hnsw_frames[name] = frame
+                self._hnsw_frames[name] = graph
 
-            def make_kernel(q=q, ef=ef, k=k, dead=dead):
-                def kernel(key, pdf):
-                    import pandas as pd
+            def load(shard, pdf):
+                from zuliasearch_spark.indexing.hnsw import decode_graph
 
-                    from zuliasearch_spark.indexing.hnsw import (
-                        decode_graph,
-                        shard_topk,
-                    )
+                return decode_graph(pdf, cache_key=(str(pdf["graph_id"].iloc[0]), shard))
 
-                    shard = int(key[0])
-                    gid = str(pdf["graph_id"].iloc[0])
-                    decoded = decode_graph(pdf, cache_key=(gid, shard))
-                    rows = shard_topk(decoded, q, ef, k, dead_ids=dead.get(shard))
-                    return pd.DataFrame(
-                        [(shard, d, u, c) for d, u, c in rows],
-                        columns=["shard", "doc_id", "uniqueId", "cosine"],
-                    )
+        def make_kernel(load):
+            def kernel(key, pdf, accept):
+                from zuliasearch_spark.indexing.hnsw import shard_topk
 
-                return kernel
-
-            if allowed is None:
-                cand = frame.groupBy("shard").applyInPandas(make_kernel(), out_schema)
-            else:
-
-                def make_cokernel(q=q, ef=ef, k=k, dead=dead):
-                    def kernel(key, left, right):
-                        from zuliasearch_spark.indexing.hnsw import (
-                            decode_graph,
-                            shard_topk,
-                        )
-
-                        shard = int(key[0])
-                        if left.empty or right.empty:
-                            return _empty_knn_pdf()
-                        gid = str(left["graph_id"].iloc[0])
-                        decoded = decode_graph(left, cache_key=(gid, shard))
-                        rows = shard_topk(
-                            decoded, q, ef, k,
-                            dead_ids=dead.get(shard),
-                            allowed_ids=right["doc_id"].to_numpy(),
-                        )
-                        return _knn_pdf(shard, rows)
-
-                    return kernel
-
-                cand = (
-                    frame.groupBy("shard")
-                    .cogroup(allowed.select("shard", "doc_id").groupBy("shard"))
-                    .applyInPandas(make_cokernel(), out_schema)
+                shard = int(key[0])
+                if pdf.empty or (accept is not None and accept.empty):
+                    return _empty_knn_pdf()
+                rows = shard_topk(
+                    load(shard, pdf), q, ef, k,
+                    dead_ids=dead.get(shard),
+                    allowed_ids=None if accept is None else accept["doc_id"].to_numpy(),
                 )
+                if accept is None:
+                    return _knn_pdf(shard, rows, 0.0)
+                score = accept.set_index("doc_id")["score"]
+                return _knn_pdf(shard, rows, score.reindex([d for d, _, _ in rows]).to_numpy())
+
+            return kernel
+
+        kernel = make_kernel(load)
+        out_schema = "shard int, doc_id long, uniqueId string, cosine double, score double"
+        if allowed is None:
+            cand = graph.groupBy("shard").applyInPandas(
+                lambda key, pdf: kernel(key, pdf, None), out_schema
+            )
+        else:
+            cand = (
+                graph.groupBy("shard")
+                .cogroup(allowed.select("shard", "doc_id", "score").groupBy("shard"))
+                .applyInPandas(kernel, out_schema)
+            )
         rows = (
             cand.orderBy(F.desc("cosine"), F.asc("shard"), F.asc("doc_id"))
             .limit(k)
             .collect()
         )
-        return [
-            {
-                "shard": int(r["shard"]),
-                "doc_id": int(r["doc_id"]),
-                "uniqueId": r["uniqueId"],
-                "cosine": float(r["cosine"]),
-            }
-            for r in rows
-        ]
+        return _knn_dicts(rows)
 
     def _ivf_probe_filter(self, base, vc, vector, k: int):
         """IVF probe: keep only rows in the cells whose trained
@@ -4239,18 +4116,18 @@ class SearchEngine:
 
         # ---- pure lexical ------------------------------------------------
         if not has_vector:
-            req = SearchRequest(tuple(clauses), amount=amount + len(exclude))
-            res = self.search(req)
+            req = SearchRequest(tuple(clauses), amount=amount)
+            tree = self._resolve_request(req)
             if exclude:
-                dropped = [t for t in res["topk"] if t["uniqueId"] in exclude]
-                res["topk"] = [
-                    t for t in res["topk"] if t["uniqueId"] not in exclude
-                ][:amount]
-                # source docs below the page can't be counted exactly
-                # from the page alone; the reference's MUST_NOT removes
-                # them index-side. Subtract the ones we saw; deeper
-                # source matches stay counted (they matched).
-                res["totalHits"] -= len(dropped)
+                # the reference's MUST_NOT id terms: one doc-values
+                # leaf over uniqueId, so totalHits stays exact
+                ids = ", ".join(
+                    "'" + u.replace("\\", "\\\\").replace("'", "\\'") + "'"
+                    for u in sorted(exclude)
+                )
+                leaf = RLeaf((DocValuesSpec(f"uniqueId IN ({ids})"),), conj=False, boost=1.0)
+                tree = RBool(((_MUST, tree), (_MUST_NOT, leaf)))
+            res = self._search_resolved({"q": (req, tree)})["q"]
             res["terms"] = all_terms
             res["termsByField"] = terms_by_field
             return res

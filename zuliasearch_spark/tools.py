@@ -648,8 +648,8 @@ def cmd_export(args) -> None:
     eng = _engine(args)
     req = _build_request(args)
     matches = eng.match_ids(req).select("shard", "doc_id")
-    live = eng._live_doc_map()
-    j = matches.join(live, ["shard", "doc_id"])
+    # match_ids already drops tombstoned docs
+    j = matches.join(eng.tables.doc_map, ["shard", "doc_id"])
     drop = [c for c in j.columns if c.startswith("_z") or c in ("shard", "doc_id")]
     j.drop(*drop).write.mode("overwrite").json(args.out)
     _emit({"exported": args.index, "out": args.out})
